@@ -81,17 +81,7 @@ def compact(
         .parquet(staging)
     )
 
-    replaced: dict[int, list[str]] = {b: [] for b in todo}
-    rel = os.path.relpath(staging, table.path)
-    if os.path.isdir(staging):
-        for d in os.listdir(staging):
-            if d.startswith("b="):
-                bb = int(d.split("=", 1)[1])
-                replaced[bb] = sorted(
-                    os.path.join(rel, d, fn)
-                    for fn in os.listdir(os.path.join(staging, d))
-                    if fn.endswith(".parquet")
-                )
+    replaced = table.staged_files(staging, todo)
     # expected_version guards the MANIFEST against a merge committing
     # between compact's snapshot read and this commit (the compacted
     # file lists would silently revert the merge's buckets while its

@@ -33,17 +33,16 @@ Observation metrics) are collected.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from polardbx_tools_spark.lake.table import (
     BOOKKEEPING_COLS,
     DELETED,
+    LSN_FLOOR,
     SEQ_LSN,
     SEQ_PART,
     SEQ_TS,
@@ -56,8 +55,6 @@ TS_COL = "ts"
 LSN_COL = "source_lsn"
 PART_COL = "source_partition"
 CDC_META_COLS = (OP_COL, LSN_COL, PART_COL)
-
-OBSERVE_PART_LIMIT = 128  # per-partition metrics via Observation up to this many
 
 
 @dataclass
@@ -166,13 +163,6 @@ def merge_into(
     (see :mod:`polardbx_tools_spark.lake.multi`).
     """
     t0 = time.time()
-    debug = os.environ.get("MERGE_DEBUG") == "1"
-    marks: list[tuple[str, float]] = []
-
-    def mark(label: str) -> None:
-        if debug:
-            marks.append((label, time.time()))
-
     stats = MergeStats()
     snap = table.snapshot()
     if expected_version is None:
@@ -221,17 +211,19 @@ def merge_into(
         for r in part_rows
         if r[PART_COL] is not None and r["max_lsn"] is not None
     }
-    mark("stats_agg")
+    # offsets advance for EVERY partition with a known max_lsn — including
+    # partitions whose events were all quarantined (invariant: quarantined
+    # events are consumed; filtering to v["events"] here would re-read and
+    # re-quarantine them on every resume) — and over partitions whose
+    # events all routed to OTHER tables (extra_offsets)
+    offsets_updates = {p: v["max_lsn"] for p, v in stats.per_partition.items()}
+    for p, lsn in (extra_offsets or {}).items():
+        offsets_updates[p] = max(int(lsn), offsets_updates.get(p, LSN_FLOOR))
     if stats.batch_events == 0:
-        # still advance offsets over an all-invalid window — and over a
-        # window whose events all routed to OTHER tables (extra_offsets)
-        empty_offsets = {p: v["max_lsn"] for p, v in stats.per_partition.items()}
-        for p, lsn in (extra_offsets or {}).items():
-            empty_offsets[p] = max(int(lsn), empty_offsets.get(p, -(1 << 62)))
-        if empty_offsets:
+        if offsets_updates:
             committed = table.commit(
                 replaced_buckets={},
-                offsets_updates=empty_offsets,
+                offsets_updates=offsets_updates,
                 expected_version=expected_version,
             )
             stats.committed_version = committed.version
@@ -337,129 +329,53 @@ def merge_into(
 
     # -- 6/7. salted rewrite + metrics in the SAME job: outcome counters
     # ride the write as Observation metrics (no persist, no second pass).
-    # Per-source-partition winners/conflicts are conditional sums — fine
-    # for ≤ OBSERVE_PART_LIMIT partitions; beyond that fall back to a
-    # cached groupBy (a real cluster with 10k binlog shards would).
+    # Conflicts are not observed: every valid source event either wins
+    # (_rn=1) or loses (_rn=2) the merge window, so conflicts ==
+    # events - winners, globally and per source partition (events come
+    # from the stats pass above).
+    # Observed metrics are evaluated per row OUTSIDE whole-stage codegen
+    # (CollectMetrics aggregates), so each expression's depth is paid
+    # interpreted at full row rate: precompute ONE codegen'd column
+    # `_swp` (= source partition of a winning source row, else NULL) and
+    # reduce every metric to a single comparison against it.
     parts = sorted(stats.per_partition)
-    use_observe = len(parts) <= OBSERVE_PART_LIMIT
-    next_version = snap.version + 1
-    staging = table.staging_dir(next_version)
+    staging = table.staging_dir(snap.version + 1)
     out_cols = payload_cols + list(BOOKKEEPING_COLS)
-
     is_win = F.col("_rn") == 1
-    is_src = F.col("_is_src") == 1
 
     def one(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
 
-    # conflict counts are NOT observed: every valid source event either
-    # wins (_rn=1) or loses (_rn=2) the merge window, so conflicts ==
-    # events - winners — globally and per source partition (events come
-    # from the stats pass above). Observing them doubled the per-row
-    # aggregate work of the write job for numbers an identity provides
-    # (r06 measurement: per-partition observe cost ~1s/batch at the 2M
-    # leg; halving the metric list recovers most of it).
-    # the observed metrics are evaluated per row OUTSIDE whole-stage
-    # codegen (CollectMetrics aggregates), so each expression's depth is
-    # paid interpreted at full row rate: precompute ONE codegen'd column
-    # `_swp` (= source partition of a winning source row, else NULL) in
-    # the projection below and reduce every metric to a single
-    # comparison against it instead of a 3-4-term boolean chain
-    swp = F.when(is_win & is_src, F.col(SEQ_PART))
-    ranked = ranked.withColumn("_swp", swp)
+    ranked = ranked.withColumn(
+        "_swp", F.when(is_win & (F.col("_is_src") == 1), F.col(SEQ_PART))
+    )
     src_win = F.col("_swp").isNotNull()
-    metrics = [
+    obs = Observation()
+    ranked = ranked.observe(
+        obs,
         one(src_win & ~F.col(DELETED)).alias("upserts"),
         one(src_win & F.col(DELETED)).alias("deletes"),
         one(is_win).alias("rows_written_total"),
-    ]
-    detail = os.environ.get("MERGE_PARTITION_METRICS", "1") == "1"
-    if detail:
-        for p in parts:
-            metrics.append(one(F.col("_swp") == p).alias(f"w{p}"))
-    else:
-        # detail off: record UNKNOWN (None), not a silently-wrong 0 —
-        # lineage consumers must not read "0 rows merged" for a batch
-        # that merged thousands with the perf knob disabled
-        for p in parts:
-            stats.per_partition[p]["winners"] = None
-            stats.per_partition[p]["conflicts"] = None
-
-    obs = None
-    if use_observe:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        ranked = ranked.observe(obs, *metrics)
-    else:
-        # the metrics agg below re-scans `ranked`: persist BEFORE the
-        # write so the cache fills during the write job — persisting
-        # after it would recompute the whole union+shuffle+window merge
-        # a second time, exactly on the high-partition-count path this
-        # fallback exists for
-        ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
+        *[one(F.col("_swp") == p).alias(f"w{p}") for p in parts],
+    )
 
     # no second shuffle: rows are already partitioned by (b, salt) and
     # key-sorted from the merge window — the writer fans out to the few
-    # bucket dirs present in each partition, emitting key-sorted files.
-    # The try/finally covers the WRITE too: on the fallback path a write
-    # failure (OOM, disk full) must still release the persisted merge
-    # plan, or a long-lived driver strands one cache per retried batch.
+    # bucket dirs present in each partition, emitting key-sorted files
     writable = ranked.filter(is_win).select(*out_cols, "b")
-    try:
-        writable.write.partitionBy("b").mode("overwrite").parquet(staging)
-        mark("merge_write")
+    writable.write.partitionBy("b").mode("overwrite").parquet(staging)
+    m = obs.get
+    stats.upserts = int(m["upserts"])
+    stats.deletes = int(m["deletes"])
+    stats.rows_written = int(m["rows_written_total"])
+    stats.conflicts_resolved = stats.batch_events - stats.upserts - stats.deletes
+    for p in parts:
+        v = stats.per_partition[p]
+        v["winners"] = int(m[f"w{p}"])
+        v["conflicts"] = v["events"] - v["winners"]
 
-        if use_observe:
-            m = obs.get
-            stats.upserts = int(m["upserts"])
-            stats.deletes = int(m["deletes"])
-            stats.rows_written = int(m["rows_written_total"])
-            if detail:
-                for p in parts:
-                    stats.per_partition[p]["winners"] = int(m[f"w{p}"])
-        else:
-            row = ranked.agg(*metrics).collect()[0].asDict()
-            stats.upserts = int(row["upserts"])
-            stats.deletes = int(row["deletes"])
-            stats.rows_written = int(row["rows_written_total"])
-            if detail:  # w{p} exists only with detail metrics on
-                for p in parts:
-                    stats.per_partition[p]["winners"] = int(row[f"w{p}"])
-        # conflicts by identity (see the metrics comment): winner +
-        # loser counts partition the valid source events exactly
-        stats.conflicts_resolved = (
-            stats.batch_events - stats.upserts - stats.deletes
-        )
-        if detail:
-            for p in parts:
-                v = stats.per_partition[p]
-                v["conflicts"] = v["events"] - v["winners"]
-    finally:
-        if not use_observe:
-            ranked.unpersist()
-
-    # -- 8. collect staged file lists per bucket, commit atomically
-    staged: dict[int, list[str]] = {b: [] for b in affected}
-    rel = os.path.relpath(staging, table.path)
-    if os.path.isdir(staging):
-        for d in os.listdir(staging):
-            if not d.startswith("b="):
-                continue
-            bb = int(d.split("=", 1)[1])
-            staged[bb] = sorted(
-                os.path.join(rel, d, fn)
-                for fn in os.listdir(os.path.join(staging, d))
-                if fn.endswith(".parquet")
-            )
-    # offsets advance for EVERY partition with a known max_lsn — including
-    # partitions whose events were all quarantined in this mixed batch
-    # (invariant: quarantined events are consumed; same as the all-invalid
-    # early-return path above). Filtering to v["events"] here would re-read
-    # and re-quarantine those events on every resume.
-    offsets_updates = {p: v["max_lsn"] for p, v in stats.per_partition.items()}
-    for p, lsn in (extra_offsets or {}).items():
-        offsets_updates[p] = max(int(lsn), offsets_updates.get(p, -(1 << 62)))
+    # -- 8. commit the staged file lists and the offsets atomically
+    staged = table.staged_files(staging, affected)
     committed = table.commit(
         replaced_buckets=staged if mode == "cow" else {},
         appended_deltas=staged if mode == "mor" else None,
@@ -470,12 +386,4 @@ def merge_into(
     )
     stats.committed_version = committed.version
     stats.wall_ms = int((time.time() - t0) * 1000)
-    if debug:
-        prev = t0
-        spans = []
-        for label, tt in marks:
-            spans.append(f"{label}={tt - prev:.1f}s")
-            prev = tt
-        spans.append(f"commit={time.time() - prev:.1f}s")
-        print(f"[merge b{batch_id}] " + " ".join(spans), flush=True)
     return stats

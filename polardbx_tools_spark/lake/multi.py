@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from polardbx_tools_spark.lake import maintenance
 from polardbx_tools_spark.lake.merge import (
     KEY_COLS,
     LSN_COL,
@@ -50,7 +51,7 @@ from polardbx_tools_spark.lake.merge import (
     MergeStats,
     merge_into,
 )
-from polardbx_tools_spark.lake.table import LakeTable
+from polardbx_tools_spark.lake.table import LSN_FLOOR, LakeTable, committed_lsn
 
 SCHEMA_COL = "schema"
 
@@ -82,23 +83,6 @@ def resume_offsets(tables: dict[str, LakeTable]) -> dict[int, int]:
         # else: at least one table never saw partition p -> no floor,
         # the window replays it (idempotent per-table)
     return out
-
-
-def committed_offsets_filter(ro: dict[int, int]):
-    """Per-row resume predicate column: a row is already applied
-    everywhere when its LSN is <= its source partition's cross-table
-    committed offset; partitions unknown to every table fall to the
-    floor sentinel (replay from the first event). ONE definition shared
-    by the batch loop (:func:`run_multi_table`) and the streaming tail
-    (``start_multi_table_cdc_stream``) so the two resume paths cannot
-    drift."""
-    floor = F.lit(-(1 << 62)).cast("long")
-    if not ro:
-        return floor
-    pairs: list = []
-    for p, lsn in ro.items():
-        pairs += [F.lit(p), F.lit(lsn)]
-    return F.coalesce(F.create_map(*pairs)[F.col(PART_COL)], floor)
 
 
 def apply_multi_table(
@@ -149,7 +133,7 @@ def apply_multi_table(
             if r[PART_COL] is not None and r["max_lsn"] is not None:
                 p = int(r[PART_COL])
                 stats.global_offsets[p] = max(
-                    int(r["max_lsn"]), stats.global_offsets.get(p, -(1 << 62))
+                    int(r["max_lsn"]), stats.global_offsets.get(p, LSN_FLOOR)
                 )
             if r["_s"] not in known:
                 stats.unknown_events += int(r["n"])
@@ -229,7 +213,7 @@ def run_multi_table(
     if max_lsn is None:
         return []
     ro = resume_offsets(tables)
-    todo = changelog.filter(F.col(LSN_COL) > committed_offsets_filter(ro))
+    todo = changelog.filter(F.col(LSN_COL) > committed_lsn(ro, PART_COL))
     out: list[MultiApplyStats] = []
     # fast-forward the window cursor past fully-consumed / below-origin
     # LSN space (the CdcPipeline.run resume skip): without this a
@@ -259,12 +243,8 @@ def run_multi_table(
         if st.global_offsets:
             out.append(st)
             if compact_deltas_over:
-                from polardbx_tools_spark.lake.maintenance import (
-                    compact_if_needed,
-                )
-
                 for name in sorted(tables):
-                    compact_if_needed(
+                    maintenance.compact_if_needed(
                         spark, tables[name],
                         max_delta_files=compact_deltas_over,
                     )

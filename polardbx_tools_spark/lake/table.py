@@ -62,6 +62,23 @@ DELETED = "_deleted"      # tombstone flag: row was deleted; kept so a late,
                           # older (ts,lsn) insert cannot resurrect it
 BOOKKEEPING_COLS = (SEQ_TS, SEQ_LSN, SEQ_PART, DELETED)
 
+# committed LSN of a source partition that has no offset yet: below every
+# real LSN, so none of that partition's events counts as applied
+LSN_FLOOR = -(1 << 62)
+
+
+def committed_lsn(offsets: dict[int, int], part_col: str) -> F.Column:
+    """Per-row committed LSN of the row's source partition.
+
+    Offsets are tiny (one per source partition), so they ride the plan as
+    a literal map — pushed into the scan filter, no join or shuffle.
+    Partitions without an offset get :data:`LSN_FLOOR`."""
+    floor = F.lit(LSN_FLOOR).cast("long")
+    if not offsets:
+        return floor
+    pairs = [F.lit(x) for p, lsn in offsets.items() for x in (p, lsn)]
+    return F.coalesce(F.create_map(*pairs)[F.col(part_col)], floor)
+
 
 def _with_bookkeeping(schema: StructType) -> StructType:
     """Physical read schema: logical schema + bookkeeping columns."""
@@ -375,6 +392,23 @@ class LakeTable:
             f"v{next_version:08d}-{uuid.uuid4().hex[:8]}",
         )
 
+    def staged_files(self, staging: str, buckets: list[int]) -> dict[int, list[str]]:
+        """Data files a writer staged under ``staging`` (its
+        ``b=<bucket>/*.parquet`` partition dirs), per bucket, as paths
+        relative to the table root. Every bucket of ``buckets`` is
+        present; one the write left no rows in maps to ``[]``."""
+        staged: dict[int, list[str]] = {b: [] for b in buckets}
+        rel = os.path.relpath(staging, self.path)
+        if os.path.isdir(staging):
+            for d in os.listdir(staging):
+                if d.startswith("b="):
+                    staged[int(d.split("=", 1)[1])] = sorted(
+                        os.path.join(rel, d, fn)
+                        for fn in os.listdir(os.path.join(staging, d))
+                        if fn.endswith(".parquet")
+                    )
+        return staged
+
     def commit(
         self,
         replaced_buckets: dict[int, list[str]],
@@ -441,7 +475,7 @@ class LakeTable:
         offsets = {k: int(v) for k, v in cur.offsets.items()}
         for p, lsn in offsets_updates.items():
             k = str(p)
-            offsets[k] = max(int(lsn), offsets.get(k, -(1 << 62)))
+            offsets[k] = max(int(lsn), offsets.get(k, LSN_FLOOR))
         snap = Snapshot(
             version=cur.version + 1,
             schema_json=json.dumps((schema or cur.schema).jsonValue()),
@@ -527,15 +561,9 @@ class LakeTable:
             df = spark.read.schema(schema).parquet(
                 *[os.path.join(self.path, f) for f in new_files]
             )
-        old_offsets = {int(k): int(v) for k, v in old.offsets.items()}
-        floor = F.lit(-(1 << 62)).cast("long")
-        if old_offsets:
-            pairs: list = []
-            for p, lsn in old_offsets.items():
-                pairs += [F.lit(p), F.lit(lsn)]
-            committed = F.coalesce(F.create_map(*pairs)[F.col(SEQ_PART)], floor)
-        else:
-            committed = floor
+        committed = committed_lsn(
+            {int(k): int(v) for k, v in old.offsets.items()}, SEQ_PART
+        )
         from pyspark.sql.window import Window
 
         key_cols = new.key_cols or [new.bucket_key]

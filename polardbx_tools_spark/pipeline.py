@@ -25,14 +25,18 @@ coupling (``cmd/FlagOption.java:47-48``).
 
 from __future__ import annotations
 
+import json
 import os
+import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polardbx_tools_spark.changelog.generator import transcripts_schema
+from polardbx_tools_spark.lake import maintenance
 from polardbx_tools_spark.lake.merge import (
     KEY_COLS,
     LSN_COL,
@@ -42,7 +46,7 @@ from polardbx_tools_spark.lake.merge import (
     MergeStats,
     merge_into,
 )
-from polardbx_tools_spark.lake.table import LakeTable
+from polardbx_tools_spark.lake.table import LakeTable, committed_lsn
 
 VALID_OPS = ("I", "U", "D")
 
@@ -104,18 +108,10 @@ class CdcPipeline:
 
     def _offsets_filter(self, df: DataFrame) -> DataFrame:
         """Drop events at-or-below the committed offset of their source
-        partition (resume). Offsets are tiny (one per source partition) →
-        literal map pushed into the scan filter, no join/shuffle."""
+        partition (resume)."""
         offsets = self.table.offsets()
         if not offsets:
             return df
-        pairs: list[F.Column] = []
-        for p, lsn in offsets.items():
-            pairs += [F.lit(p), F.lit(lsn)]
-        m = F.create_map(*pairs)
-        committed = F.coalesce(
-            m[F.col(PART_COL)], F.lit(-(1 << 62)).cast("long")
-        )
         # NOTE: a coarse `lsn > min(offsets)` bound would push down to the
         # scan, but is only safe if every source partition already has a
         # committed offset — an unseen partition's early events would be
@@ -127,7 +123,8 @@ class CdcPipeline:
         # quarantine write, the _errors record, and the max_errors gate
         # on every batch after the first offset commits.
         return df.filter(
-            (F.col(LSN_COL) > committed) | F.col(LSN_COL).isNull()
+            (F.col(LSN_COL) > committed_lsn(offsets, PART_COL))
+            | F.col(LSN_COL).isNull()
         )
 
     def _split_quarantine(self, df: DataFrame) -> tuple[DataFrame, F.Column]:
@@ -186,9 +183,7 @@ class CdcPipeline:
         if not skip_offsets_filter:
             batch = self._offsets_filter(batch)
         df, bad = self._split_quarantine(batch)
-        if timeout is not None:
-            stats = self._apply_with_timeout(df, bad, batch_id, timeout)
-        else:
+        with self._watchdog(batch_id, timeout):
             stats = merge_into(
                 self.spark,
                 self.table,
@@ -232,10 +227,13 @@ class CdcPipeline:
         )
         return stats
 
-    def _apply_with_timeout(self, df, bad, batch_id: int, timeout: float) -> MergeStats:
-        import json
-        import threading
-
+    @contextmanager
+    def _watchdog(self, batch_id: int, timeout: float | None):
+        """Run the body under the batch wall budget (no-op when
+        ``timeout`` is None); see :meth:`apply_batch`."""
+        if timeout is None:
+            yield
+            return
         sc = self.spark.sparkContext
         group = f"cdc-batch-{batch_id}"
         fired = threading.Event()
@@ -248,15 +246,7 @@ class CdcPipeline:
         sc.setJobGroup(group, f"cdc microbatch {batch_id} (timeout {timeout}s)")
         watchdog.start()
         try:
-            stats_ok = merge_into(
-                self.spark,
-                self.table,
-                df,
-                batch_id=batch_id,
-                key_cols=self.key_cols,
-                invalid_cond=bad,
-                mode=self.merge_mode,
-            )
+            yield
         except Exception as e:
             # attribute to the timeout ONLY when the watchdog fired AND
             # the error is the cancellation it caused — a genuine merge
@@ -267,17 +257,7 @@ class CdcPipeline:
             # "cancelled"/"cancel" in their message)
             if not fired.is_set() or "cancel" not in str(e).lower():
                 raise
-            os.makedirs(self._errors_dir, exist_ok=True)
-            with open(
-                os.path.join(self._errors_dir, "timeout_batches.jsonl"),
-                "a",
-                encoding="utf-8",
-            ) as f:
-                f.write(json.dumps({
-                    "batch_id": batch_id,
-                    "timeout_sec": timeout,
-                    "error": str(e)[:500],
-                }) + "\n")
+            self._record_timeout(batch_id, timeout, error=str(e)[:500])
             raise RuntimeError(
                 f"batch {batch_id} exceeded batch_timeout={timeout}s and was "
                 f"cancelled (quarantined at {self._errors_dir}/"
@@ -295,17 +275,7 @@ class CdcPipeline:
             # atomically with the data — so record the overrun and abort
             # the RUN instead of silently blowing the budget; a resumed
             # run continues AFTER this batch via its offsets.
-            os.makedirs(self._errors_dir, exist_ok=True)
-            with open(
-                os.path.join(self._errors_dir, "timeout_batches.jsonl"),
-                "a",
-                encoding="utf-8",
-            ) as f:
-                f.write(json.dumps({
-                    "batch_id": batch_id,
-                    "timeout_sec": timeout,
-                    "committed": True,
-                }) + "\n")
+            self._record_timeout(batch_id, timeout, committed=True)
             raise RuntimeError(
                 f"batch {batch_id} exceeded batch_timeout={timeout}s during "
                 f"its commit tail and had already committed when the "
@@ -313,7 +283,17 @@ class CdcPipeline:
                 f"{self._errors_dir}/timeout_batches.jsonl; a resumed run "
                 f"continues AFTER this batch)"
             )
-        return stats_ok
+
+    def _record_timeout(self, batch_id: int, timeout: float, **detail) -> None:
+        os.makedirs(self._errors_dir, exist_ok=True)
+        with open(
+            os.path.join(self._errors_dir, "timeout_batches.jsonl"),
+            "a",
+            encoding="utf-8",
+        ) as f:
+            f.write(json.dumps(
+                {"batch_id": batch_id, "timeout_sec": timeout, **detail}
+            ) + "\n")
 
     def run(
         self,
@@ -440,15 +420,9 @@ class CdcPipeline:
                     if lag > 0:
                         time.sleep(lag)
                 if compact_every and result.batches % compact_every == 0:
-                    from polardbx_tools_spark.lake.maintenance import compact
-
-                    compact(self.spark, self.table)
+                    maintenance.compact(self.spark, self.table)
                 if compact_deltas_over:
-                    from polardbx_tools_spark.lake.maintenance import (
-                        compact_if_needed,
-                    )
-
-                    compact_if_needed(
+                    maintenance.compact_if_needed(
                         self.spark, self.table,
                         max_delta_files=compact_deltas_over,
                     )

@@ -17,11 +17,15 @@ and they do because apply_batch filters on committed offsets first).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from polardbx_tools_spark.lake import maintenance
+from polardbx_tools_spark.lake.merge import LSN_COL, OP_COL, PART_COL
+from polardbx_tools_spark.lake.multi import apply_multi_table, resume_offsets
+from polardbx_tools_spark.lake.table import LakeTable, committed_lsn
 from polardbx_tools_spark.pipeline import CdcPipeline
 
 
@@ -35,6 +39,33 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(p))
+
+
+def _read_tail(
+    spark: SparkSession, source_dir: str, schema: StructType, fmt: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """File-tail source: new files under ``source_dir`` per trigger, at
+    most ``max_files_per_trigger`` of them when set."""
+    reader = spark.readStream.schema(schema).format(fmt)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.load(source_dir)
+
+
+def _start_foreach_batch(
+    stream: DataFrame, apply, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start ``apply(batch_df, batch_id)`` per microbatch of ``stream``;
+    ``available_now`` drains what exists and stops."""
+    writer = (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_cdc_stream(
@@ -64,30 +95,16 @@ def start_cdc_stream(
                        merge_mode=merge_mode, max_errors=max_errors)
     pipe.ensure_table(with_tool="tool" in schema.fieldNames())
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
+    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply(batch_df, batch_id: int) -> None:
         pipe.apply_batch(batch_df, batch_id=batch_id)
         if compact_deltas_over:
-            from polardbx_tools_spark.lake.maintenance import (
-                compact_if_needed,
-            )
-
-            compact_if_needed(
+            maintenance.compact_if_needed(
                 spark, pipe.table, max_delta_files=compact_deltas_over
             )
 
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
 
 
 def start_multi_table_cdc_stream(
@@ -145,18 +162,8 @@ def start_multi_table_cdc_stream(
     mid-stream: compaction commits are ordinary atomic snapshots, and
     an expected_version conflict with a concurrent merge just defers
     the fold to the next trigger."""
-    from polardbx_tools_spark.lake.merge import LSN_COL, PART_COL
-    from polardbx_tools_spark.lake.multi import (
-        apply_multi_table,
-        committed_offsets_filter,
-        resume_offsets,
-    )
-    from polardbx_tools_spark.lake.table import LakeTable
-
-    from pyspark.sql.types import StructType as _St
-
-    meta = {"op", LSN_COL, PART_COL, schema_col}
-    payload = _St([f for f in schema.fields if f.name not in meta])
+    meta = {OP_COL, LSN_COL, PART_COL, schema_col}
+    payload = StructType([f for f in schema.fields if f.name not in meta])
     tables: dict[str, LakeTable] = {}
     for name, path in table_paths.items():
         t = LakeTable(path)
@@ -165,17 +172,13 @@ def start_multi_table_cdc_stream(
             bucket_count=bucket_count, key_cols=key_cols,
         )
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
+    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply(batch_df, batch_id: int) -> None:
         ro = resume_offsets(tables) if assume_ordered else None
         if ro:
-            # ONE shared resume predicate with run_multi_table
             batch_df = batch_df.filter(
-                F.col(LSN_COL) > committed_offsets_filter(ro)
+                F.col(LSN_COL) > committed_lsn(ro, PART_COL)
             )
         apply_multi_table(
             spark, tables, batch_df, batch_id=batch_id,
@@ -183,13 +186,9 @@ def start_multi_table_cdc_stream(
             mode=merge_mode, on_unknown=on_unknown,
         )
         if compact_deltas_over:
-            from polardbx_tools_spark.lake.maintenance import (
-                compact_if_needed,
-            )
-
             for name in sorted(tables):
                 try:
-                    compact_if_needed(
+                    maintenance.compact_if_needed(
                         spark, tables[name],
                         max_delta_files=compact_deltas_over,
                     )
@@ -199,14 +198,7 @@ def start_multi_table_cdc_stream(
                     # never fail the stream over housekeeping
                     pass
 
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
 
 
 def start_windowed_counts_stream(
@@ -234,10 +226,7 @@ def start_windowed_counts_stream(
     State is bounded by (windows inside the watermark horizon), not by
     stream length — the scale-correct shape for an endless tail.
     """
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
+    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
     agg = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"))
@@ -395,10 +384,7 @@ def start_dedup_stream(
         uni.count(), bi.count()
         lm_state = (uni, bi, consts)
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
+    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply(batch_df, batch_id: int) -> None:
         # ALWAYS heal a crashed compact() before the existence probe —
@@ -579,14 +565,7 @@ def start_dedup_stream(
             for df_ in to_unpersist:
                 df_.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
 
 
 def start_embedding_dedup_stream(
@@ -658,10 +637,7 @@ def start_embedding_dedup_stream(
         spark, index_path, dim=dim, n_planes=n_planes, n_tables=n_tables
     )
 
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(source_dir)
+    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply(batch_df, batch_id: int) -> None:
         # always heal a crashed compact() before the existence probe
@@ -769,11 +745,4 @@ def start_embedding_dedup_stream(
             for df_ in to_unpersist:
                 df_.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)

@@ -85,3 +85,36 @@ def test_batch_timeout_fires_and_quarantines(spark, tmp_path):
     res = pipe.run(cl, batch_lsns=200, max_lsn=200, with_tool=True,
                    batch_timeout=120.0)
     assert res.events_applied == 200
+
+
+def test_batch_timeout_after_commit_records_overrun(spark, tmp_path, monkeypatch):
+    """A watchdog that fires after the merge's Spark jobs ended (its
+    driver-side commit tail) has nothing to cancel: the batch stays
+    committed, the overrun is recorded as committed, and the run aborts."""
+    from polardbx_tools_spark import pipeline as pipeline_mod
+
+    cl = generate_changelog(spark, ChangelogSpec(n_events=200, n_convs=10, seed=5))
+    # the same run without a budget: warms the session and is the state
+    # the overrun batch must leave committed
+    ref = CdcPipeline(spark, str(tmp_path / "ref"), bucket_count=4)
+    ref.run(cl, batch_lsns=1000, with_tool=True)
+
+    budget = 6.0
+    real = pipeline_mod.merge_into
+
+    def slow_tail(*args, **kwargs):
+        t0 = time.time()
+        stats = real(*args, **kwargs)
+        time.sleep(max(0.0, t0 + budget + 1.0 - time.time()))
+        return stats
+
+    monkeypatch.setattr(pipeline_mod, "merge_into", slow_tail)
+    path = str(tmp_path / "t")
+    pipe = CdcPipeline(spark, path, bucket_count=4)
+    with pytest.raises(RuntimeError, match="during its commit tail"):
+        pipe.run(cl, batch_lsns=1000, with_tool=True, batch_timeout=budget)
+    assert pipe.table.offsets() == ref.table.offsets() != {}
+    assert _final_state(pipe) == _final_state(ref)
+    with open(os.path.join(path, "_errors", "timeout_batches.jsonl")) as f:
+        recs = [json.loads(line) for line in f]
+    assert recs == [{"batch_id": 0, "timeout_sec": budget, "committed": True}]

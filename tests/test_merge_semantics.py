@@ -311,28 +311,35 @@ def test_quarantined_ts_does_not_poison_event_time_bounds(spark, tmp_table_path)
     assert stats.min_ts == T0 + dt.timedelta(seconds=10)
 
 
-def test_partition_metrics_off_fallback_records_unknown(
-    spark, tmp_table_path, monkeypatch
-):
-    """MERGE_PARTITION_METRICS=0 on the >OBSERVE_PART_LIMIT fallback path
-    must not crash on the absent w{p}/c{p} aggregates, and per-partition
-    lineage must record unknown (null) rather than a silently-wrong 0."""
-    from polardbx_tools_spark.lake import merge as merge_mod
-
-    monkeypatch.setattr(merge_mod, "OBSERVE_PART_LIMIT", 0)  # force fallback
-    monkeypatch.setenv("MERGE_PARTITION_METRICS", "0")
+def test_per_partition_metrics_beyond_128_partitions(spark, tmp_table_path):
+    """A batch from 130 source partitions gets exact per-partition
+    winners/conflicts from the write's Observation, in MergeStats and in
+    lineage — including within-batch losers of the same partition and of
+    another partition."""
+    n = 130
+    rows = [ev("I", f"c{p}", 0, f"v{p}", 10, p + 1, part=p) for p in range(n)]
+    rows += [
+        ev("I", "c7", 0, "older", 5, 200, part=7),     # loses to its own part
+        ev("U", "c21", 0, "older", 5, 201, part=20),   # loses to part 21
+        ev("D", "c128", 0, None, 20, 202, part=129),   # beats part 128
+    ]
     pipe = CdcPipeline(spark, tmp_table_path, bucket_count=4)
     pipe.ensure_table(with_tool=True)
-    stats = pipe.apply_batch(make_df(spark, [
-        ev("I", "c1", 0, "a", 10, 1, part=0),
-        ev("I", "c2", 0, "b", 11, 2, part=1),
-    ]), 0)
-    assert stats.upserts == 2  # batch totals still exact
-    assert all(v["winners"] is None and v["conflicts"] is None
-               for v in stats.per_partition.values())
-    lineage = pipe.table.read_lineage(spark).collect()
-    assert len(lineage) == 2
-    assert all(r["rows_merged"] is None for r in lineage)
+    stats = pipe.apply_batch(make_df(spark, rows), 0)
+
+    want = {p: {"events": 1, "winners": 1, "conflicts": 0} for p in range(n)}
+    want[7] = {"events": 2, "winners": 1, "conflicts": 1}
+    want[20] = {"events": 2, "winners": 1, "conflicts": 1}
+    want[128] = {"events": 1, "winners": 0, "conflicts": 1}
+    want[129] = {"events": 2, "winners": 2, "conflicts": 0}
+    got = {p: {k: v[k] for k in ("events", "winners", "conflicts")}
+           for p, v in stats.per_partition.items()}
+    assert got == want
+    assert (stats.batch_events, stats.upserts, stats.deletes,
+            stats.conflicts_resolved) == (n + 3, n - 1, 1, 3)
+    lineage = {r["source_partition"]: (r["rows_merged"], r["conflicts_resolved"])
+               for r in pipe.table.read_lineage(spark).collect()}
+    assert lineage == {p: (v["winners"], v["conflicts"]) for p, v in want.items()}
 
 
 def test_incremental_changes_multi_commit_net_change(spark, tmp_table_path):
