@@ -667,8 +667,8 @@ def _q_cdc_incremental_read(spark, sf):
         F.pmod(F.col("user_id"), F.lit(4)).cast("int").alias("source_partition"),
     )
     # identical value to max(source_lsn)/2 (source_lsn IS event_id), but
-    # aggregated straight over the scan so the parquet aggregate
-    # pushdown resolves it from footer statistics — no full pass
+    # aggregated straight over the scan: the V1 parquet source pushes no
+    # MAX down to footer statistics, so this is a pruned one-column pass
     mid = ev.agg((F.floor(F.max("event_id") / 2)).cast("long")).collect()[0][0]
     tmp = _scratch_dir("cdc-inc-")
     try:

@@ -97,55 +97,6 @@ def compact(
             "files_after": files_after, "rows": n_rows}
 
 
-def compact_if_needed(
-    spark: SparkSession,
-    table: LakeTable,
-    max_delta_files: int = 8,
-    max_delta_bytes: int | None = None,
-    target_file_rows: int = 1_000_000,
-) -> dict | None:
-    """DELTA-PRESSURE compaction: fold merge-on-read deltas back into
-    the base for exactly the buckets whose delta backlog crossed a
-    threshold — ``max_delta_files`` delta files and/or
-    ``max_delta_bytes`` total delta bytes per bucket.
-
-    This bounds MOR read amplification on a long tail: ``merge_into(
-    mode="mor")`` appends ~batch-sized deltas forever, and every read of
-    a delta-carrying bucket pays a union + key-window over ALL its
-    deltas (round-3 finding: read cost grows without bound between
-    manual compactions; the reference's point-write DB does this
-    housekeeping itself). With a file-count trigger of K, a reader
-    merges at most K deltas per bucket and each delta row is rewritten
-    O(1) amortized times per K batches — compaction work stays ∝ the
-    hot buckets' data, not the table (cold buckets are never touched).
-
-    Sizes come from the filesystem metadata of the manifest's delta
-    paths (a listing, no data read). Returns :func:`compact`'s stats
-    for the compacted buckets, or ``None`` when no bucket is over
-    threshold. Safe to call after every microbatch; concurrent-commit
-    conflicts surface as ``compact``'s expected_version error."""
-    snap = table.snapshot()
-    over: list[int] = []
-    for b, files in snap.deltas.items():
-        if len(files) > max_delta_files:
-            over.append(int(b))
-            continue
-        if max_delta_bytes is not None:
-            total = 0
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(table.path, f))
-                except OSError:
-                    pass
-            if total > max_delta_bytes:
-                over.append(int(b))
-    if not over:
-        return None
-    return compact(
-        spark, table, target_file_rows=target_file_rows, buckets=sorted(over)
-    )
-
-
 def expire_snapshots(table: LakeTable, keep_last: int = 2) -> list[int]:
     """Drop old snapshot manifests (time travel horizon). Data files are
     NOT touched here — vacuum() reclaims unreferenced ones."""

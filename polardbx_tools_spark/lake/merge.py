@@ -64,7 +64,10 @@ class MergeStats:
     rows_written: int = 0
     upserts: int = 0
     deletes: int = 0
-    conflicts_resolved: int = 0  # events that lost last-writer-wins (dup/late)
+    # events that lost last-writer-wins (dup/late): within the batch, and
+    # against the table's rows in the buckets the merge rewrote (every
+    # touched bucket in COW, the delta-pressure folded ones in MOR)
+    conflicts_resolved: int = 0
     affected_buckets: list[int] = field(default_factory=list)
     min_ts: object = None  # event-time bounds of the batch (rate-factor replay)
     max_ts: object = None
@@ -125,6 +128,7 @@ def merge_into(
     invalid_cond: F.Column | None = None,
     mode: str = "cow",
     extra_offsets: dict[int, int] | None = None,
+    compact_deltas_over: int | None = None,
 ) -> MergeStats:
     """Apply one changelog microbatch to the table, committing new data
     files + advanced offsets in a single atomic snapshot.
@@ -148,13 +152,29 @@ def merge_into(
       rows for the same reason). Reads merge base+deltas by the SAME
       total order (see ``LakeTable.read``); compaction folds deltas back
       into the base. Cross-batch conflicts resolve at read time, so
-      ``conflicts_resolved`` here counts only within-batch losers.
+      ``conflicts_resolved`` here counts only within-batch losers of the
+      buckets it does not fold (below).
+
+    ``compact_deltas_over=K`` (MOR only) is the delta-pressure bound: a
+    touched bucket already holding K delta files is FOLDED — its
+    current rows join the union and the bucket is rewritten as in COW —
+    and every other touched bucket gets ONE delta file, all in the
+    commit that advances the offsets. So no committed snapshot holds
+    more than K delta files in any bucket. Visible differences from a
+    separate compaction: no ``op=compact`` snapshot is written; a
+    bucket folds the next time a batch touches it (an untouched bucket
+    gains no deltas, so the bound still holds); a fold writes
+    ``salt_n`` files per bucket, the layout a COW merge of the batch
+    writes; ``conflicts_resolved`` also counts the folded buckets'
+    cross-batch losers, as COW does. A falsy K (None or 0) never folds
+    and leaves the appends salted.
 
     Both modes share one physical shape: shuffle ONCE by
     ``(bucket, salt(key))``, sort by ``(key, seq desc)``, first row of
     each key run wins, the same sort clusters the write. The only
-    difference is whether the target's rows join the union and whether
-    the commit replaces bucket file lists or appends to their deltas.
+    difference is which buckets' target rows join the union (all touched
+    ones in COW, the folded ones in MOR) and whether the commit replaces
+    their file lists or appends to their deltas.
 
     ``extra_offsets`` (source_partition -> lsn) are max-merged into the
     committed offsets — the multi-table router passes the GLOBAL mixed-
@@ -278,9 +298,21 @@ def merge_into(
         (F.col(OP_COL) == F.lit("D")).alias(DELETED),
         F.lit(1).alias("_is_src"),
     )
-    if mode == "cow":
+    # adaptive salt: enough sub-splits per bucket to keep every core busy
+    # without exploding the file count (files/batch ≈ shuffle partitions)
+    cores = spark.sparkContext.defaultParallelism
+    salt_n = max(1, (2 * cores) // max(1, len(affected)))
+    salt = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(salt_n))
+    folded = affected if mode == "cow" else []
+    if mode == "mor" and compact_deltas_over:
+        # fold the buckets already holding K deltas; every other bucket
+        # gets ONE unsalted delta file, so it stays within K
+        folded = [b for b in affected
+                  if len(snap.deltas.get(str(b), [])) >= compact_deltas_over]
+        salt = F.when(F.col("b").isin(*folded), salt).otherwise(F.lit(0))
+    if folded:
         tgt = table.read(
-            spark, buckets=affected, include_bookkeeping=True, include_deleted=True
+            spark, buckets=folded, include_bookkeeping=True, include_deleted=True
         )
         for f in schema.fields:  # evolved columns read as NULL from old files
             if f.name not in tgt.columns:
@@ -294,14 +326,8 @@ def merge_into(
             F.lit(0).alias("_is_src"),
         )
         src = src.unionByName(tgt)
-    # else MOR: the target never joins the union — within-batch dedup
-    # only, the delta files resolve against the base at read time
-    # adaptive salt: enough sub-splits per bucket to keep every core busy
-    # without exploding the file count (files/batch ≈ shuffle partitions)
-    cores = spark.sparkContext.defaultParallelism
-    salt_n = max(1, (2 * cores) // max(1, len(affected)))
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(salt_n))
-
+    # an unfolded MOR bucket's target never joins the union — within-batch
+    # dedup only, its delta files resolve against the base at read time
     unioned = src.withColumn("b", bucket).withColumn("_salt", salt)
     w = Window.partitionBy(F.col("b"), F.col("_salt")).orderBy(
         *[F.col(k) for k in key_cols],
@@ -377,8 +403,8 @@ def merge_into(
     # -- 8. commit the staged file lists and the offsets atomically
     staged = table.staged_files(staging, affected)
     committed = table.commit(
-        replaced_buckets=staged if mode == "cow" else {},
-        appended_deltas=staged if mode == "mor" else None,
+        replaced_buckets={b: staged[b] for b in folded},
+        appended_deltas={b: f for b, f in staged.items() if b not in folded},
         offsets_updates=offsets_updates,
         schema=schema if evolved else None,
         properties={"batch_id": str(batch_id), "mode": mode},

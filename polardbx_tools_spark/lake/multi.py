@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from polardbx_tools_spark.lake import maintenance
 from polardbx_tools_spark.lake.merge import (
     KEY_COLS,
     LSN_COL,
@@ -94,8 +93,8 @@ def apply_multi_table(
     schema_col: str = SCHEMA_COL,
     mode: str = "cow",
     on_unknown: str = "error",
-    cache: bool = True,
     max_parallel_tables: int = 1,
+    compact_deltas_over: int | None = None,
 ) -> MultiApplyStats:
     """Apply one mixed changelog microbatch to every routed table.
 
@@ -114,12 +113,15 @@ def apply_multi_table(
     of tables having committed (global offsets + per-partition-MIN
     resume). Default stays serial — deterministic apply order keeps
     crash-window tests reproducible.
+
+    ``compact_deltas_over`` is each routed merge's merge-on-read
+    delta-pressure bound (see
+    :func:`~polardbx_tools_spark.lake.merge.merge_into`).
     """
     if on_unknown not in ("error", "ignore"):
         raise ValueError(f"on_unknown must be 'error'|'ignore', got {on_unknown!r}")
     stats = MultiApplyStats()
-    if cache:
-        batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
+    batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # one tiny pass: per-(schema, partition) facts -> global offsets
         # + unknown-route count (≤ #tables × #source-partitions rows)
@@ -154,6 +156,7 @@ def apply_multi_table(
                 key_cols=key_cols,
                 mode=mode,
                 extra_offsets=stats.global_offsets,
+                compact_deltas_over=compact_deltas_over,
             )
 
         names = sorted(tables)
@@ -170,8 +173,7 @@ def apply_multi_table(
                 stats.per_table[name] = _one(name)
         return stats
     finally:
-        if cache:
-            batch.unpersist()
+        batch.unpersist()
 
 
 def run_multi_table(
@@ -192,15 +194,14 @@ def run_multi_table(
     :func:`apply_multi_table`. Restart-safe: a crash anywhere replays
     the open window into every table idempotently.
 
-    ``compact_deltas_over``: delta-pressure MOR compaction threshold
-    (max delta files per bucket), checked PER ROUTED TABLE after each
-    applied window — the multi-table wiring of the single-table
-    ``CdcPipeline.run(compact_deltas_over=)`` trigger. Without it a
-    long ``mode='mor'`` run accumulates deltas unboundedly in every
-    routed table (round-4 verdict gap #1; reference analog: the
-    point-write DB's own housekeeping, worker/update/
-    ReplaceConsumer.java). The check is a per-table manifest read (no
-    data scan) and compaction touches only over-threshold buckets.
+    ``compact_deltas_over``: the MOR delta-pressure bound (max delta
+    files per bucket), passed to every routed table's merge, which
+    folds any touched bucket already holding K inside its own commit —
+    the multi-table wiring of the single-table
+    ``CdcPipeline.run(compact_deltas_over=)``. Without it a long
+    ``mode='mor'`` run accumulates deltas unboundedly in every routed
+    table (reference analog: the point-write DB's own housekeeping,
+    worker/update/ReplaceConsumer.java).
 
     (Single-table extras — quarantine budget, pacing, circle replay —
     stay on :class:`~polardbx_tools_spark.pipeline.CdcPipeline`; route a
@@ -238,16 +239,10 @@ def run_multi_table(
         st = apply_multi_table(
             spark, tables, window, batch_id=batch_id,
             key_cols=key_cols, schema_col=schema_col, mode=mode,
-            on_unknown=on_unknown,
+            on_unknown=on_unknown, compact_deltas_over=compact_deltas_over,
         )
         if st.global_offsets:
             out.append(st)
-            if compact_deltas_over:
-                for name in sorted(tables):
-                    maintenance.compact_if_needed(
-                        spark, tables[name],
-                        max_delta_files=compact_deltas_over,
-                    )
             if monitor:
                 applied = sum(
                     s.upserts + s.deletes for s in st.per_table.values()

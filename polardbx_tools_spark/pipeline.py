@@ -127,25 +127,14 @@ class CdcPipeline:
             | F.col(LSN_COL).isNull()
         )
 
-    def _split_quarantine(self, df: DataFrame) -> tuple[DataFrame, F.Column]:
-        # NULL source_partition / ts are malformed too: such events would
-        # merge but escape offset accounting and lineage, so they would be
-        # idempotently re-merged on every resume (and never counted).
-        bad = (
-            F.col(OP_COL).isNull()
-            | ~F.col(OP_COL).isin(*VALID_OPS)
-            | F.col(LSN_COL).isNull()
-            | F.col(PART_COL).isNull()
-            | F.col(TS_COL).isNull()
-        )
-        for k in self.key_cols:
-            bad = bad | F.col(k).isNull()
-        return df, bad
-
     def _quarantine_reason(self) -> F.Column:
-        """First matching malformation cause — persisted with each
+        """First matching malformation cause, NULL for a well-formed row:
+        the one place the rule is written. Persisted with each
         quarantined row (the reference logs its skip causes per bad line,
-        ``DirectImportWorker.java:107-128``)."""
+        ``DirectImportWorker.java:107-128``). NULL source_partition / ts
+        are malformed too: such events would merge but escape offset
+        accounting and lineage, so they would be idempotently re-merged
+        on every resume (and never counted)."""
         reason = (
             F.when(F.col(OP_COL).isNull() | ~F.col(OP_COL).isin(*VALID_OPS),
                    F.lit("invalid_op"))
@@ -155,7 +144,7 @@ class CdcPipeline:
         )
         for k in self.key_cols:
             reason = reason.when(F.col(k).isNull(), F.lit(f"null_key:{k}"))
-        return reason.otherwise(F.lit("unknown"))
+        return reason
 
     # --------------------------------------------------------------- apply
 
@@ -165,6 +154,7 @@ class CdcPipeline:
         batch_id: int,
         skip_offsets_filter: bool = False,
         timeout: float | None = None,
+        compact_deltas_over: int | None = None,
     ) -> MergeStats:
         """Apply one already-windowed changelog slice.
 
@@ -179,27 +169,30 @@ class CdcPipeline:
         to ``_errors/timeout_batches.jsonl`` and the run aborts. Offsets
         never advanced (they commit with the data), so a resumed run
         retries the batch from the committed snapshot.
+
+        ``compact_deltas_over`` is the merge-on-read delta-pressure bound
+        (see :func:`~polardbx_tools_spark.lake.merge.merge_into`).
         """
         if not skip_offsets_filter:
             batch = self._offsets_filter(batch)
-        df, bad = self._split_quarantine(batch)
+        reason = self._quarantine_reason()
+        bad = reason.isNotNull()
         with self._watchdog(batch_id, timeout):
             stats = merge_into(
                 self.spark,
                 self.table,
-                df,
+                batch,
                 batch_id=batch_id,
                 key_cols=self.key_cols,
                 invalid_cond=bad,
                 mode=self.merge_mode,
+                compact_deltas_over=compact_deltas_over,
             )
         if stats.invalid_events:
             # rare path: only malformed batches pay a second (filtered) scan
-            df.filter(bad).withColumn(
-                "_error_reason", self._quarantine_reason()
-            ).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(self._errors_dir)
+            batch.filter(bad).withColumn("_error_reason", reason).withColumn(
+                "_batch_id", F.lit(batch_id)
+            ).write.mode("append").parquet(self._errors_dir)
             if stats.invalid_events > self.max_errors:
                 raise RuntimeError(
                     f"batch {batch_id}: {stats.invalid_events} malformed events "
@@ -331,11 +324,12 @@ class CdcPipeline:
         MonitorThread (``thread/MonitorThread.java:35-114``).
         ``compact_every`` compacts the table after every N batches
         (steady-state file-count control for long tails).
-        ``compact_deltas_over`` is the merge-on-read DELTA-PRESSURE
-        trigger: after each batch, any bucket holding more than this
-        many delta files is selectively compacted
-        (``maintenance.compact_if_needed``) — bounds read amplification
-        on a long MOR tail without rewriting cold buckets. Typical:
+        ``compact_deltas_over=K`` is the merge-on-read DELTA-PRESSURE
+        bound: each batch's merge folds any touched bucket already
+        holding K delta files, inside the merge commit (see
+        :func:`~polardbx_tools_spark.lake.merge.merge_into`) — bounds
+        read amplification on a long MOR tail in every committed
+        snapshot without rewriting cold buckets. Typical:
         ``CdcPipeline(..., merge_mode="mor")`` +
         ``run(compact_deltas_over=8)``.
 
@@ -379,6 +373,7 @@ class CdcPipeline:
                     batch_id=batch_id,
                     skip_offsets_filter=replay_pass,
                     timeout=batch_timeout,
+                    compact_deltas_over=compact_deltas_over,
                 )
                 result.batches += 1
                 result.events_applied += stats.batch_events
@@ -421,11 +416,6 @@ class CdcPipeline:
                         time.sleep(lag)
                 if compact_every and result.batches % compact_every == 0:
                     maintenance.compact(self.spark, self.table)
-                if compact_deltas_over:
-                    maintenance.compact_if_needed(
-                        self.spark, self.table,
-                        max_delta_files=compact_deltas_over,
-                    )
                 lo, batch_id = hi, batch_id + 1
                 if stop_after_batches is not None and result.batches >= stop_after_batches:
                     result.circles = pass_i + 1

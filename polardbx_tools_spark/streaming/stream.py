@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from polardbx_tools_spark.lake import maintenance
 from polardbx_tools_spark.lake.merge import LSN_COL, OP_COL, PART_COL
 from polardbx_tools_spark.lake.multi import apply_multi_table, resume_offsets
 from polardbx_tools_spark.lake.table import LakeTable, committed_lsn
@@ -87,9 +86,9 @@ def start_cdc_stream(
     replay mode); ``False`` keeps tailing (the production mode).
     ``merge_mode="mor"`` appends batch-sized delta files per microbatch —
     the natural mode for a high-frequency tail; pair with
-    ``compact_deltas_over=N`` (the delta-pressure trigger
-    ``maintenance.compact_if_needed`` after each microbatch, same knob
-    as ``CdcPipeline.run``) or the tail's read amplification grows
+    ``compact_deltas_over=N`` (the delta-pressure bound each
+    microbatch's merge keeps inside its own commit, same knob as
+    ``CdcPipeline.run``) or the tail's read amplification grows
     without bound. Default copy-on-write."""
     pipe = CdcPipeline(spark, table_path, bucket_count=bucket_count,
                        merge_mode=merge_mode, max_errors=max_errors)
@@ -98,11 +97,8 @@ def start_cdc_stream(
     stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply(batch_df, batch_id: int) -> None:
-        pipe.apply_batch(batch_df, batch_id=batch_id)
-        if compact_deltas_over:
-            maintenance.compact_if_needed(
-                spark, pipe.table, max_delta_files=compact_deltas_over
-            )
+        pipe.apply_batch(batch_df, batch_id=batch_id,
+                         compact_deltas_over=compact_deltas_over)
 
     return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
 
@@ -155,13 +151,11 @@ def start_multi_table_cdc_stream(
     correctly by the (ts, lsn, part) total order, at the cost of replay
     work per restarted checkpoint.
 
-    ``compact_deltas_over``: delta-pressure MOR compaction threshold
-    (max delta files per bucket), checked per routed table after each
-    microbatch — without it a long ``merge_mode='mor'`` tail
-    accumulates deltas unboundedly (round-4 verdict gap #1). Safe
-    mid-stream: compaction commits are ordinary atomic snapshots, and
-    an expected_version conflict with a concurrent merge just defers
-    the fold to the next trigger."""
+    ``compact_deltas_over``: the MOR delta-pressure bound (max delta
+    files per bucket), kept by every routed table's merge inside its
+    own commit — without it a long ``merge_mode='mor'`` tail
+    accumulates deltas unboundedly. The fold is part of the merge
+    commit, so it cannot race the merge."""
     meta = {OP_COL, LSN_COL, PART_COL, schema_col}
     payload = StructType([f for f in schema.fields if f.name not in meta])
     tables: dict[str, LakeTable] = {}
@@ -184,19 +178,8 @@ def start_multi_table_cdc_stream(
             spark, tables, batch_df, batch_id=batch_id,
             key_cols=key_cols, schema_col=schema_col,
             mode=merge_mode, on_unknown=on_unknown,
+            compact_deltas_over=compact_deltas_over,
         )
-        if compact_deltas_over:
-            for name in sorted(tables):
-                try:
-                    maintenance.compact_if_needed(
-                        spark, tables[name],
-                        max_delta_files=compact_deltas_over,
-                    )
-                except RuntimeError:
-                    # concurrent-commit guard tripped (external writer on
-                    # this table); the fold retries at the next trigger —
-                    # never fail the stream over housekeeping
-                    pass
 
     return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
 

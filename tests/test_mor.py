@@ -196,14 +196,38 @@ def test_mor_deltas_tracked_and_cleared(spark, tmp_table_path):
     assert pipe.read_transcripts().count() == n
 
 
+def assert_delta_bound_every_version(table, k):
+    """No committed snapshot of ``table`` holds more than ``k`` delta
+    files in any bucket."""
+    for v in table.snapshots():
+        deltas = table.snapshot(v).deltas
+        worst = max((len(fl) for fl in deltas.values()), default=0)
+        assert worst <= k, (
+            f"v{v}: a bucket holds {worst} > {k} delta files: "
+            f"{ {b: len(fl) for b, fl in deltas.items()} }"
+        )
+
+
+def fold_versions(table, k):
+    """Versions whose commit folded a bucket: it held at least ``k``
+    delta files at the previous version and none at this one."""
+    versions = table.snapshots()
+    out = []
+    for prev, v in zip(versions, versions[1:]):
+        before, after = table.snapshot(prev).deltas, table.snapshot(v).deltas
+        if any(len(fl) >= k and not after.get(b) for b, fl in before.items()):
+            out.append(v)
+    return out
+
+
 def test_mor_delta_pressure_compaction_bounds_read_tax(spark, tmp_path):
     """Long MOR tail with the delta-pressure trigger: without it, every
     bucket's delta list grows ~one file per touching batch (unbounded
     read-side merge, the round-3 scale wart); with
-    ``run(compact_deltas_over=K)`` the backlog is folded whenever a
-    bucket crosses K delta files, so a reader merges at most ~K deltas
-    per bucket at ANY point in the tail — and the final state is
-    byte-identical to the untriggered run."""
+    ``run(compact_deltas_over=K)`` a merge folds any touched bucket
+    already holding K delta files inside its own commit, so a reader
+    merges at most K deltas per bucket in EVERY committed snapshot —
+    and the final state is byte-identical to the untriggered run."""
     from polardbx_tools_spark.changelog.generator import (
         ChangelogSpec,
         generate_changelog,
@@ -228,6 +252,7 @@ def test_mor_delta_pressure_compaction_bounds_read_tax(spark, tmp_path):
         f"delta backlog must stay bounded by the trigger, got {max_trig}: "
         f"{ {b: len(v) for b, v in trig.deltas.items()} }"
     )
+    assert_delta_bound_every_version(pipes["trig"].table, K)
     # compaction must not disturb state, offsets, or resume invariants
     a = sorted(map(tuple, pipes["plain"].read_transcripts().collect()))
     b = sorted(map(tuple, pipes["trig"].read_transcripts().collect()))
@@ -237,6 +262,63 @@ def test_mor_delta_pressure_compaction_bounds_read_tax(spark, tmp_path):
     r = pipes["trig"].run(cl, batch_lsns=10**9)
     assert r.events_applied == 0
     assert sorted(map(tuple, pipes["trig"].read_transcripts().collect())) == a
+
+
+def test_mor_stream_delta_bound_holds_in_every_version(spark, tmp_path):
+    """A merge-on-read file tail with ``compact_deltas_over=K`` keeps
+    the delta bound in every committed snapshot (the fold rides the
+    merge commit; a separate compaction commit would leave each merge
+    commit at K+1 deltas until it ran) and drains to the replay
+    oracle."""
+    import glob
+    import shutil
+    import time
+
+    import pandas.testing as pdt
+
+    from oracle import normalize, replay_oracle
+    from polardbx_tools_spark.changelog.generator import (
+        ChangelogSpec,
+        changelog_schema,
+        generate_changelog,
+    )
+    from polardbx_tools_spark.streaming import start_cdc_stream
+
+    cl = generate_changelog(spark, ChangelogSpec(n_events=1200, n_convs=60, seed=33))
+    src, seg = str(tmp_path / "src"), str(tmp_path / "_seg")
+    os.makedirs(src)
+    cl.repartitionByRange(12, "source_lsn").write.parquet(seg)
+    base = time.time()  # LSN-ordered files with distinct ascending mtimes
+    for i, f in enumerate(sorted(glob.glob(seg + "/part-*.parquet"))):
+        dst = f"{src}/f-{i:04d}.parquet"
+        shutil.copy(f, dst)
+        os.utime(dst, (base + i, base + i))
+
+    K = 3
+    table = str(tmp_path / "t")
+    # without AQE's partition coalescing every salt of a bucket lands in
+    # its own write task, as in a batch too large to coalesce: a salted
+    # delta append would then add up to salt_n files per bucket
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        q = start_cdc_stream(
+            spark, src, changelog_schema(with_tool=True), table,
+            str(tmp_path / "ckpt"), bucket_count=4, max_files_per_trigger=1,
+            merge_mode="mor", compact_deltas_over=K,
+        )
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set(coalesce, prev)
+    pipe = CdcPipeline(spark, table, bucket_count=4, merge_mode="mor")
+    assert len(pipe.table.snapshots()) > 2 * K, "tail too short to fold"
+    assert_delta_bound_every_version(pipe.table, K)
+    assert fold_versions(pipe.table, K), "the bound never folded a bucket"
+    payload = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    got = normalize(pipe.read_transcripts().toPandas(), payload)
+    want = normalize(replay_oracle(cl.toPandas(), payload), payload)
+    pdt.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_mor_read_uses_window_group_limit(spark, tmp_table_path):

@@ -39,8 +39,9 @@ def main() -> None:
     ap.add_argument("--compact-every", type=int, default=None,
                     help="compact the table after every N microbatches")
     ap.add_argument("--compact-deltas-over", type=int, default=None,
-                    help="merge-on-read delta-pressure trigger: compact "
-                         "any bucket holding more than K delta files")
+                    help="merge-on-read delta-pressure bound: fold any "
+                         "touched bucket already holding K delta files, "
+                         "inside the merge commit")
     ap.add_argument("--tables", default=None,
                     help="MULTI-TABLE routed apply (batch-tool -t t1,t2 "
                          "analog): comma list of name=path lake tables; "
