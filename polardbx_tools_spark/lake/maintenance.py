@@ -64,7 +64,7 @@ def compact(
     if drop_tombstones:
         df = df.filter(~F.coalesce(F.col(DELETED), F.lit(False)))
 
-    bucket = table.bucket_expr(snapshot=snap)
+    bucket = F.expr(table.bucket_sql(snapshot=snap))
     next_version = snap.version + 1
     staging = table.staging_dir(next_version)
     n_rows = df.count()

@@ -28,7 +28,17 @@ to touched data; the deterministic per-key salt spreads a hot
 conversation across its turns (north_rule explicit-skew handling); AQE
 stays on as the backstop. No driver-side data movement: only tiny
 aggregates (per-source-partition counts/max-LSN, ≤ #partitions rows plus
-Observation metrics) are collected.
+Observation metrics) are collected. A MOR fold unions the folded
+buckets' raw base and delta rows into the same shuffle: the merge window
+resolves them in the read-time merge's order, so the fold adds no merge
+window of its own.
+
+Plan construction: on a small microbatch, building the plans on the
+driver costs as much as running them, and each Column object is several
+py4j round trips. So every stage is one ``selectExpr``, ``F.expr`` or
+string ``filter`` of SQL text, every column name quoted by
+:func:`~polardbx_tools_spark.lake.table.ident`: a merge makes a few
+hundred round trips, not a few thousand.
 """
 
 from __future__ import annotations
@@ -38,15 +48,18 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from polardbx_tools_spark.lake.table import (
     BOOKKEEPING_COLS,
     DELETED,
     LSN_FLOOR,
+    SEQ_DESC,
     SEQ_LSN,
     SEQ_PART,
     SEQ_TS,
     LakeTable,
+    ident,
 )
 
 KEY_COLS = ("conv_id", "turn_idx")
@@ -102,19 +115,25 @@ def dedup_last_writer(
     )
 
 
-def _align_source_payload(source: DataFrame, schema) -> DataFrame:
-    """Add any table-schema payload columns the batch lacks (as NULL).
+def _project(
+    df: DataFrame, schema: StructType, have: set[str], extra: list[str]
+) -> DataFrame:
+    """One projection of ``df`` onto the table's payload columns plus the
+    ``extra`` SQL texts.
 
-    Full-row REPLACE semantics (reference K3): an update event missing a
-    payload column sets it to NULL. Pre-evolution batches merged into an
-    evolved table therefore write NULL ``tool`` — same as the reference
-    replaying old statements against an ALTERed table.
+    A payload column ``df`` lacks reads as NULL. Full-row REPLACE
+    semantics (reference K3): an update event missing a payload column
+    sets it to NULL, so pre-evolution batches merged into an evolved
+    table write NULL ``tool`` — same as the reference replaying old
+    statements against an ALTERed table; old files read the same way.
     """
-    have = set(source.columns)
-    out = source
-    for f in schema.fields:
-        if f.name not in have and f.name not in BOOKKEEPING_COLS:
-            out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
+    payload = [f for f in schema.fields if f.name not in BOOKKEEPING_COLS]
+    out = df.selectExpr(*[ident(f.name) for f in payload if f.name in have], *extra)
+    missing = [f for f in payload if f.name not in have]
+    if missing:  # rare: only the batches and files that predate an evolution
+        out = out.select(
+            "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
+        )
     return out
 
 
@@ -191,27 +210,30 @@ def merge_into(
     # -- 1. per-source-partition batch facts + affected buckets, ONE pass
     # (tiny collect: ≤ #source-partitions rows, each with ≤ bucket_count
     # bucket ids — the only data that ever reaches the driver)
-    bucket = table.bucket_expr(snapshot=snap)
+    bucket = table.bucket_sql(snapshot=snap)
+    batch_fields = batch.schema.fields
     valid = ~invalid_cond if invalid_cond is not None else F.lit(True)
+    batch = batch.select("*", valid.alias("_v"))
+    ts = ident(TS_COL)
     part_rows = (
-        batch.withColumn("_b", F.when(valid, bucket))
-        .groupBy(PART_COL)
-        .agg(
-            F.sum(valid.cast("long")).alias("events"),
-            F.sum((~valid).cast("long")).alias("invalid"),
+        batch.groupBy(PART_COL)
+        .agg(*[F.expr(e) for e in (
+            "sum(CAST(_v AS BIGINT)) AS events",
+            "sum(CAST(NOT _v AS BIGINT)) AS invalid",
             # offsets advance over quarantined events too: a skipped bad
             # line is consumed (ref -maxError skip semantics)
-            F.max(LSN_COL).alias("max_lsn"),
+            f"max({ident(LSN_COL)}) AS max_lsn",
             # event-time bounds ride the same pass (rate-factor replay
             # pacing + monitor delay gauge; ref MonitorThread.java:92-95).
             # VALID rows only: a quarantined event's corrupt timestamp
             # must not hijack pacing (one year-3000 ts would make a
             # rate-factor run sleep forever on a row that was
             # consumed-and-skipped)
-            F.min(F.when(valid, F.col(TS_COL))).alias("min_ts"),
-            F.max(F.when(valid, F.col(TS_COL))).alias("max_ts"),
-            F.collect_set("_b").alias("buckets"),  # nulls (invalid) excluded
-        )
+            f"min(CASE WHEN _v THEN {ts} END) AS min_ts",
+            f"max(CASE WHEN _v THEN {ts} END) AS max_ts",
+            # nulls (invalid) excluded
+            f"collect_set(CASE WHEN _v THEN {bucket} END) AS buckets",
+        )])
         .collect()
     )
     ts_los = [r["min_ts"] for r in part_rows if r["min_ts"] is not None]
@@ -249,13 +271,14 @@ def merge_into(
             stats.committed_version = committed.version
         stats.wall_ms = int((time.time() - t0) * 1000)
         return stats
-    if invalid_cond is not None:
-        batch = batch.filter(valid)
+    batch = batch.filter("_v")
     affected = sorted({b for r in part_rows for b in r["buckets"]})
     stats.affected_buckets = affected
 
     # -- 2. additive schema evolution (Iceberg-style ADD COLUMN)
-    payload_schema = batch.drop(*CDC_META_COLS).schema
+    payload_schema = StructType(
+        [f for f in batch_fields if f.name not in CDC_META_COLS]
+    )
     new_schema = table.evolved_schema(payload_schema, snapshot=snap)
     evolved = new_schema.fieldNames() != snap.schema.fieldNames()
     schema = new_schema if evolved else snap.schema
@@ -277,8 +300,6 @@ def merge_into(
     # sorts first (_is_src asc), so replays are observable no-ops: the
     # idempotence the reference gets from INSERT IGNORE
     # (``cmd/FlagOption.java:47-48``).
-    from pyspark.sql.window import Window
-
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown merge mode {mode!r}")
     if mode == "mor" and list(snap.key_cols or []) != list(key_cols):
@@ -290,75 +311,69 @@ def merge_into(
             f"{list(key_cols)} (found {snap.key_cols}); create the table "
             f"with LakeTable.create(..., key_cols=...)"
         )
-    src = _align_source_payload(batch, schema).select(
-        *[F.col(c) for c in payload_cols],
-        F.col(TS_COL).alias(SEQ_TS),
-        F.col(LSN_COL).alias(SEQ_LSN),
-        F.col(PART_COL).alias(SEQ_PART),
-        (F.col(OP_COL) == F.lit("D")).alias(DELETED),
-        F.lit(1).alias("_is_src"),
-    )
+    src = _project(batch, schema, {f.name for f in batch_fields}, [
+        f"{ts} AS {ident(SEQ_TS)}",
+        f"{ident(LSN_COL)} AS {ident(SEQ_LSN)}",
+        f"{ident(PART_COL)} AS {ident(SEQ_PART)}",
+        f"{ident(OP_COL)} = 'D' AS {ident(DELETED)}",
+        "1 AS _is_src",
+    ])
     # adaptive salt: enough sub-splits per bucket to keep every core busy
     # without exploding the file count (files/batch ≈ shuffle partitions)
     cores = spark.sparkContext.defaultParallelism
     salt_n = max(1, (2 * cores) // max(1, len(affected)))
-    salt = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(salt_n))
+    keys = ", ".join(ident(k) for k in key_cols)
+    salt = f"pmod(xxhash64({keys}), {salt_n})"
     folded = affected if mode == "cow" else []
     if mode == "mor" and compact_deltas_over:
         # fold the buckets already holding K deltas; every other bucket
         # gets ONE unsalted delta file, so it stays within K
         folded = [b for b in affected
                   if len(snap.deltas.get(str(b), [])) >= compact_deltas_over]
-        salt = F.when(F.col("b").isin(*folded), salt).otherwise(F.lit(0))
-    if folded:
-        tgt = table.read(
-            spark, buckets=folded, include_bookkeeping=True, include_deleted=True
-        )
-        for f in schema.fields:  # evolved columns read as NULL from old files
-            if f.name not in tgt.columns:
-                tgt = tgt.withColumn(f.name, F.lit(None).cast(f.dataType))
-        tgt = tgt.select(
-            *[F.col(c) for c in payload_cols],
-            F.col(SEQ_TS),
-            F.col(SEQ_LSN),
-            F.col(SEQ_PART),
-            F.coalesce(F.col(DELETED), F.lit(False)).alias(DELETED),
-            F.lit(0).alias("_is_src"),
-        )
-        src = src.unionByName(tgt)
+        in_folded = ", ".join(str(int(b)) for b in folded)
+        salt = f"if({bucket} IN ({in_folded}), {salt}, 0)" if folded else "0L"
+    # the folded buckets' raw base and delta rows join the union, and the
+    # merge window resolves them as LakeTable.read's merge would: on an
+    # exact tie base (-1) sorts before delta (0) before source (1). The
+    # tie rank is why base and deltas are two scans.
+    for files, rank in ((snap.base_files(folded), -1), (snap.delta_files(folded), 0)):
+        if files:
+            src = src.unionByName(_project(
+                table.scan(spark, snap, files), schema,
+                set(snap.schema.fieldNames()), [
+                    ident(SEQ_TS),
+                    ident(SEQ_LSN),
+                    ident(SEQ_PART),
+                    f"coalesce({ident(DELETED)}, false) AS {ident(DELETED)}",
+                    f"{rank} AS _is_src",
+                ]))
     # an unfolded MOR bucket's target never joins the union — within-batch
-    # dedup only, its delta files resolve against the base at read time
-    unioned = src.withColumn("b", bucket).withColumn("_salt", salt)
-    w = Window.partitionBy(F.col("b"), F.col("_salt")).orderBy(
-        *[F.col(k) for k in key_cols],
-        F.col(SEQ_TS).desc(),
-        F.col(SEQ_LSN).desc(),
-        F.col(SEQ_PART).desc(),
-        F.col("_is_src").asc(),
-    )
+    # dedup only, its delta files resolve against the base at read time.
+    # ONE window spec text for every lag, so the plan has one Window.
+    w = f"OVER (PARTITION BY b, _salt ORDER BY {keys}, {SEQ_DESC}, _is_src)"
     # first-row detection must be its own marker (lag of a constant):
     # inferring it from prev_key NULLness conflates "first row of the
     # partition" with "previous row's key value was NULL". Key
     # comparisons are NULL-SAFE: with plain `!=`, a NULL-keyed row after
-    # a non-NULL key makes the whole OR-chain NULL → rank 2 → the row
-    # silently vanishes from the write; two consecutive NULL-keyed rows
-    # would BOTH rank 1 and both be written. (CdcPipeline quarantines
-    # NULL keys before this point, but merge_into is exported API.)
-    first_row = F.lag(F.lit(1)).over(w).isNull()
-    prev_key = [F.lag(F.col(k)).over(w) for k in key_cols]
-    key_change = first_row
-    for k, pk in zip(key_cols, prev_key):
-        key_change = key_change | ~pk.eqNullSafe(F.col(k))
-    ranked = unioned.withColumn(
-        "_rn", F.when(key_change, F.lit(1)).otherwise(F.lit(2))
+    # a non-NULL key makes the whole OR-chain NULL → the row silently
+    # vanishes from the write; two consecutive NULL-keyed rows would
+    # BOTH win and both be written. (CdcPipeline quarantines NULL keys
+    # before this point, but merge_into is exported API.)
+    key_change = " OR ".join(
+        [f"lag(1) {w} IS NULL"]
+        + [f"NOT (lag({ident(k)}) {w} <=> {ident(k)})" for k in key_cols]
+    )
+    ranked = (
+        src.selectExpr("*", f"{bucket} AS b", f"{salt} AS _salt")
+        .selectExpr("*", f"{key_change} AS _win")
     )
 
     # -- 6/7. salted rewrite + metrics in the SAME job: outcome counters
     # ride the write as Observation metrics (no persist, no second pass).
     # Conflicts are not observed: every valid source event either wins
-    # (_rn=1) or loses (_rn=2) the merge window, so conflicts ==
-    # events - winners, globally and per source partition (events come
-    # from the stats pass above).
+    # (_win) or loses the merge window, so conflicts == events - winners,
+    # globally and per source partition (events come from the stats pass
+    # above).
     # Observed metrics are evaluated per row OUTSIDE whole-stage codegen
     # (CollectMetrics aggregates), so each expression's depth is paid
     # interpreted at full row rate: precompute ONE codegen'd column
@@ -366,29 +381,25 @@ def merge_into(
     # reduce every metric to a single comparison against it.
     parts = sorted(stats.per_partition)
     staging = table.staging_dir(snap.version + 1)
-    out_cols = payload_cols + list(BOOKKEEPING_COLS)
-    is_win = F.col("_rn") == 1
-
-    def one(cond):
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-
-    ranked = ranked.withColumn(
-        "_swp", F.when(is_win & (F.col("_is_src") == 1), F.col(SEQ_PART))
+    deleted = ident(DELETED)
+    ranked = ranked.selectExpr(
+        "*", f"CASE WHEN _win AND _is_src = 1 THEN {ident(SEQ_PART)} END AS _swp"
     )
-    src_win = F.col("_swp").isNotNull()
     obs = Observation()
-    ranked = ranked.observe(
-        obs,
-        one(src_win & ~F.col(DELETED)).alias("upserts"),
-        one(src_win & F.col(DELETED)).alias("deletes"),
-        one(is_win).alias("rows_written_total"),
-        *[one(F.col("_swp") == p).alias(f"w{p}") for p in parts],
-    )
+    ranked = ranked.observe(obs, *[
+        F.expr(f"CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) AS BIGINT) AS {name}")
+        for name, cond in [
+            ("upserts", f"_swp IS NOT NULL AND NOT {deleted}"),
+            ("deletes", f"_swp IS NOT NULL AND {deleted}"),
+            ("rows_written_total", "_win"),
+        ] + [(f"w{p}", f"_swp = {int(p)}") for p in parts]
+    ])
 
     # no second shuffle: rows are already partitioned by (b, salt) and
     # key-sorted from the merge window — the writer fans out to the few
     # bucket dirs present in each partition, emitting key-sorted files
-    writable = ranked.filter(is_win).select(*out_cols, "b")
+    out_cols = payload_cols + list(BOOKKEEPING_COLS)
+    writable = ranked.filter("_win").selectExpr(*[ident(c) for c in out_cols], "b")
     writable.write.partitionBy("b").mode("overwrite").parquet(staging)
     m = obs.get
     stats.upserts = int(m["upserts"])

@@ -50,7 +50,7 @@ from polardbx_tools_spark.lake.merge import (
     MergeStats,
     merge_into,
 )
-from polardbx_tools_spark.lake.table import LSN_FLOOR, LakeTable, committed_lsn
+from polardbx_tools_spark.lake.table import LSN_FLOOR, LakeTable, committed_lsn, ident
 
 SCHEMA_COL = "schema"
 
@@ -214,7 +214,7 @@ def run_multi_table(
     if max_lsn is None:
         return []
     ro = resume_offsets(tables)
-    todo = changelog.filter(F.col(LSN_COL) > committed_lsn(ro, PART_COL))
+    todo = changelog.filter(f"{ident(LSN_COL)} > {committed_lsn(ro, PART_COL)}")
     out: list[MultiApplyStats] = []
     # fast-forward the window cursor past fully-consumed / below-origin
     # LSN space (the CdcPipeline.run resume skip): without this a

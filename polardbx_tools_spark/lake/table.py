@@ -46,7 +46,6 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 META_DIR = "_meta"
@@ -67,17 +66,33 @@ BOOKKEEPING_COLS = (SEQ_TS, SEQ_LSN, SEQ_PART, DELETED)
 LSN_FLOOR = -(1 << 62)
 
 
-def committed_lsn(offsets: dict[int, int], part_col: str) -> F.Column:
-    """Per-row committed LSN of the row's source partition.
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: the engine builds its
+    plans from SQL text, and payload columns need not be bare identifiers
+    (``tool-id``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# the last-writer-wins total order (newest first), as ORDER BY text
+SEQ_DESC = f"{ident(SEQ_TS)} DESC, {ident(SEQ_LSN)} DESC, {ident(SEQ_PART)} DESC"
+
+
+def committed_lsn(offsets: dict[int, int], part_col: str) -> str:
+    """SQL text: per-row committed LSN of the row's source partition.
 
     Offsets are tiny (one per source partition), so they ride the plan as
     a literal map — pushed into the scan filter, no join or shuffle.
     Partitions without an offset get :data:`LSN_FLOOR`."""
-    floor = F.lit(LSN_FLOOR).cast("long")
+    floor = f"CAST({LSN_FLOOR} AS BIGINT)"
     if not offsets:
         return floor
-    pairs = [F.lit(x) for p, lsn in offsets.items() for x in (p, lsn)]
-    return F.coalesce(F.create_map(*pairs)[F.col(part_col)], floor)
+    pairs = ", ".join(f"{int(p)}, {int(lsn)}" for p, lsn in offsets.items())
+    return f"coalesce(map({pairs})[{ident(part_col)}], {floor})"
 
 
 def _with_bookkeeping(schema: StructType) -> StructType:
@@ -259,11 +274,12 @@ class LakeTable:
 
     # ---------------------------------------------------------------- read
 
-    def bucket_expr(
+    def bucket_sql(
         self, key_col: str | None = None, snapshot: "Snapshot | None" = None
-    ) -> F.Column:
-        """Deterministic bucket id of a key column (client-side routing,
-        same role as ``DbUtil.java:386-396``'s ``hash % n``).
+    ) -> str:
+        """SQL text of the deterministic bucket id of a key column
+        (client-side routing, same role as ``DbUtil.java:386-396``'s
+        ``hash % n``).
 
         The SINGLE source of truth for bucket routing — every write path
         (merge, compaction) derives its bucket column here, so the
@@ -272,8 +288,21 @@ class LakeTable:
         misattribute, breaking bucket pruning). Pass ``snapshot`` to pin
         an already-read snapshot instead of re-reading the pointer."""
         snap = snapshot or self.snapshot()
-        key = key_col or snap.bucket_key
-        return F.pmod(F.xxhash64(F.col(key)), F.lit(snap.bucket_count)).cast("int")
+        key = ident(key_col or snap.bucket_key)
+        return f"CAST(pmod(xxhash64({key}), {int(snap.bucket_count)}) AS INT)"
+
+    def scan(self, spark: SparkSession, snap: Snapshot, files: list[str]) -> DataFrame:
+        """The raw rows of ``files`` (paths relative to the root) under
+        ``snap``'s schema, bookkeeping columns included: no tombstone
+        filter and no read-time merge of deltas — the merge's fold
+        resolves those in its own window. Old files missing newly-added
+        columns read as NULL."""
+        schema = _with_bookkeeping(snap.schema)
+        if not files:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
 
     def read(
         self,
@@ -298,40 +327,26 @@ class LakeTable:
         adds NO merge window: the plan is the plain pruned scan.
         """
         snap = self.snapshot(version)
-        schema = _with_bookkeeping(snap.schema)
         base_files = snap.base_files(buckets)
         delta_files = snap.delta_files(buckets)
-
-        def scan(files: list[str]) -> DataFrame:
-            if not files:
-                return spark.createDataFrame([], schema)
-            return spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in files]
-            )
-
         if not delta_files:
-            df = scan(base_files)
+            df = self.scan(spark, snap, base_files)
         else:
-            key_cols = snap.key_cols or [snap.bucket_key]
-            from pyspark.sql.window import Window
-
+            keys = ", ".join(ident(k) for k in snap.key_cols or [snap.bucket_key])
             unioned = (
-                scan(base_files).withColumn("_is_delta", F.lit(0))
-                .unionByName(scan(delta_files).withColumn("_is_delta", F.lit(1)))
-            )
-            w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(
-                F.col(SEQ_TS).desc(),
-                F.col(SEQ_LSN).desc(),
-                F.col(SEQ_PART).desc(),
-                F.col("_is_delta").asc(),
+                self.scan(spark, snap, base_files).selectExpr("*", "0 AS _is_delta")
+                .unionByName(
+                    self.scan(spark, snap, delta_files).selectExpr("*", "1 AS _is_delta")
+                )
             )
             df = (
-                unioned.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
+                unioned.selectExpr("*", f"row_number() OVER (PARTITION BY {keys} "
+                                   f"ORDER BY {SEQ_DESC}, _is_delta) AS _rn")
+                .filter("_rn = 1")
                 .drop("_rn", "_is_delta")
             )
         if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(DELETED), F.lit(False)))
+            df = df.filter(f"NOT coalesce({ident(DELETED)}, false)")
         if not include_bookkeeping:
             df = df.drop(*BOOKKEEPING_COLS)
         return df
@@ -348,7 +363,7 @@ class LakeTable:
         reference's create-only DDL path (``DdlImportWorker.java:188-210``
         tolerates "already exists" but never alters types). Pass
         ``snapshot`` to pin an already-read snapshot (same contract as
-        :meth:`bucket_expr`): the merge compares field names against the
+        :meth:`bucket_sql`): the merge compares field names against the
         snapshot it staged under, so evolving against a concurrently
         flipped pointer would check one schema and commit another.
         """
@@ -554,32 +569,19 @@ class LakeTable:
         new = self.snapshot(to_version)
         old_files = set(old.all_files())
         new_files = [f for f in new.all_files() if f not in old_files]
-        schema = _with_bookkeeping(new.schema)
-        if not new_files:
-            df = spark.createDataFrame([], schema)
-        else:
-            df = spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in new_files]
-            )
         committed = committed_lsn(
             {int(k): int(v) for k, v in old.offsets.items()}, SEQ_PART
         )
-        from pyspark.sql.window import Window
-
-        key_cols = new.key_cols or [new.bucket_key]
-        w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(
-            F.col(SEQ_TS).desc(), F.col(SEQ_LSN).desc(), F.col(SEQ_PART).desc()
-        )
+        keys = ", ".join(ident(k) for k in new.key_cols or [new.bucket_key])
         return (
-            df.filter(F.col(SEQ_LSN) > committed)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
+            self.scan(spark, new, new_files)
+            .filter(f"{ident(SEQ_LSN)} > {committed}")
+            .selectExpr("*", f"row_number() OVER (PARTITION BY {keys} "
+                        f"ORDER BY {SEQ_DESC}) AS _rn")
+            .filter("_rn = 1")
             .drop("_rn")
-            .withColumn(
-                "_change_type",
-                F.when(F.coalesce(F.col(DELETED), F.lit(False)), F.lit("delete"))
-                .otherwise(F.lit("upsert")),
-            )
+            .selectExpr("*", f"CASE WHEN coalesce({ident(DELETED)}, false) "
+                        "THEN 'delete' ELSE 'upsert' END AS _change_type")
             .drop(*BOOKKEEPING_COLS)
         )
 

@@ -46,7 +46,7 @@ from polardbx_tools_spark.lake.merge import (
     MergeStats,
     merge_into,
 )
-from polardbx_tools_spark.lake.table import LakeTable, committed_lsn
+from polardbx_tools_spark.lake.table import LakeTable, committed_lsn, ident, sql_str
 
 VALID_OPS = ("I", "U", "D")
 
@@ -122,29 +122,31 @@ class CdcPipeline:
         # never be true of them, and dropping them here would bypass the
         # quarantine write, the _errors record, and the max_errors gate
         # on every batch after the first offset commits.
+        lsn = ident(LSN_COL)
         return df.filter(
-            (F.col(LSN_COL) > committed_lsn(offsets, PART_COL))
-            | F.col(LSN_COL).isNull()
+            f"{lsn} > {committed_lsn(offsets, PART_COL)} OR {lsn} IS NULL"
         )
 
-    def _quarantine_reason(self) -> F.Column:
-        """First matching malformation cause, NULL for a well-formed row:
-        the one place the rule is written. Persisted with each
-        quarantined row (the reference logs its skip causes per bad line,
-        ``DirectImportWorker.java:107-128``). NULL source_partition / ts
-        are malformed too: such events would merge but escape offset
+    def _quarantine_reason(self) -> str:
+        """SQL text of the first matching malformation cause, NULL for a
+        well-formed row: the one place the rule is written. Persisted with
+        each quarantined row (the reference logs its skip causes per bad
+        line, ``DirectImportWorker.java:107-128``). NULL source_partition
+        / ts are malformed too: such events would merge but escape offset
         accounting and lineage, so they would be idempotently re-merged
         on every resume (and never counted)."""
-        reason = (
-            F.when(F.col(OP_COL).isNull() | ~F.col(OP_COL).isin(*VALID_OPS),
-                   F.lit("invalid_op"))
-            .when(F.col(LSN_COL).isNull(), F.lit("null_lsn"))
-            .when(F.col(PART_COL).isNull(), F.lit("null_source_partition"))
-            .when(F.col(TS_COL).isNull(), F.lit("null_ts"))
-        )
-        for k in self.key_cols:
-            reason = reason.when(F.col(k).isNull(), F.lit(f"null_key:{k}"))
-        return reason
+        op = ident(OP_COL)
+        ops = ", ".join(sql_str(o) for o in VALID_OPS)
+        whens = [
+            f"WHEN {op} IS NULL OR {op} NOT IN ({ops}) THEN 'invalid_op'",
+            f"WHEN {ident(LSN_COL)} IS NULL THEN 'null_lsn'",
+            f"WHEN {ident(PART_COL)} IS NULL THEN 'null_source_partition'",
+            f"WHEN {ident(TS_COL)} IS NULL THEN 'null_ts'",
+        ] + [
+            f"WHEN {ident(k)} IS NULL THEN {sql_str(f'null_key:{k}')}"
+            for k in self.key_cols
+        ]
+        return f"CASE {' '.join(whens)} END"
 
     # --------------------------------------------------------------- apply
 
@@ -176,7 +178,7 @@ class CdcPipeline:
         if not skip_offsets_filter:
             batch = self._offsets_filter(batch)
         reason = self._quarantine_reason()
-        bad = reason.isNotNull()
+        bad = f"({reason}) IS NOT NULL"
         with self._watchdog(batch_id, timeout):
             stats = merge_into(
                 self.spark,
@@ -184,14 +186,14 @@ class CdcPipeline:
                 batch,
                 batch_id=batch_id,
                 key_cols=self.key_cols,
-                invalid_cond=bad,
+                invalid_cond=F.expr(bad),
                 mode=self.merge_mode,
                 compact_deltas_over=compact_deltas_over,
             )
         if stats.invalid_events:
             # rare path: only malformed batches pay a second (filtered) scan
-            batch.filter(bad).withColumn("_error_reason", reason).withColumn(
-                "_batch_id", F.lit(batch_id)
+            batch.filter(bad).selectExpr(
+                "*", f"{reason} AS _error_reason", f"{int(batch_id)} AS _batch_id"
             ).write.mode("append").parquet(self._errors_dir)
             if stats.invalid_events > self.max_errors:
                 raise RuntimeError(
@@ -366,7 +368,7 @@ class CdcPipeline:
             while lo <= max_lsn:
                 hi = lo + batch_lsns
                 window = changelog.filter(
-                    (F.col(LSN_COL) >= lo) & (F.col(LSN_COL) < hi)
+                    f"{ident(LSN_COL)} >= {lo} AND {ident(LSN_COL)} < {hi}"
                 )
                 stats = self.apply_batch(
                     window,

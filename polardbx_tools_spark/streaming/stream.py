@@ -24,7 +24,7 @@ from pyspark.sql.types import StructType
 
 from polardbx_tools_spark.lake.merge import LSN_COL, OP_COL, PART_COL
 from polardbx_tools_spark.lake.multi import apply_multi_table, resume_offsets
-from polardbx_tools_spark.lake.table import LakeTable, committed_lsn
+from polardbx_tools_spark.lake.table import LakeTable, committed_lsn, ident
 from polardbx_tools_spark.pipeline import CdcPipeline
 
 
@@ -172,7 +172,7 @@ def start_multi_table_cdc_stream(
         ro = resume_offsets(tables) if assume_ordered else None
         if ro:
             batch_df = batch_df.filter(
-                F.col(LSN_COL) > committed_lsn(ro, PART_COL)
+                f"{ident(LSN_COL)} > {committed_lsn(ro, PART_COL)}"
             )
         apply_multi_table(
             spark, tables, batch_df, batch_id=batch_id,

@@ -5,9 +5,11 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from polardbx_tools_spark.changelog.generator import changelog_schema
+from polardbx_tools_spark.changelog.generator import changelog_schema, transcripts_schema
 from polardbx_tools_spark.lake.merge import dedup_last_writer
+from polardbx_tools_spark.lake.table import LakeTable
 from polardbx_tools_spark.pipeline import CdcPipeline
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -84,27 +86,49 @@ def test_update_missing_tool_nulls_it(spark, tmp_table_path):
     assert row["text"] == "updated" and row["tool"] is None
 
 
-def test_quarantine_and_error_budget(spark, tmp_table_path):
-    pipe = CdcPipeline(spark, tmp_table_path, bucket_count=4, max_errors=2)
-    pipe.ensure_table(with_tool=True)
-    bad = make_df(spark, [
+def test_quarantine_and_error_budget(spark, tmp_table_path, conv_col="conv_id"):
+    """``conv_col`` renames the leading key column."""
+    pipe = CdcPipeline(spark, tmp_table_path, bucket_count=4, max_errors=2,
+                       key_cols=(conv_col, "turn_idx"))
+    if conv_col == "conv_id":
+        pipe.ensure_table(with_tool=True)
+    else:
+        schema = StructType([
+            StructField(conv_col, f.dataType, f.nullable) if f.name == "conv_id" else f
+            for f in transcripts_schema(True).fields
+        ])
+        LakeTable.create(tmp_table_path, schema,
+                         bucket_key=conv_col, bucket_count=4,
+                         key_cols=(conv_col, "turn_idx"))
+
+    def df(rows):
+        return make_df(spark, rows).withColumnRenamed("conv_id", conv_col)
+
+    bad = df([
         ev("I", "c1", 0, "ok", 10, 1),
         ("X", "c2", 0, "u", "t", None, T0, 2, 0),        # bad op
         ("I", None, 0, "u", "t", None, T0, 3, 0),        # null key
     ])
     stats = pipe.apply_batch(bad, batch_id=0)
     assert stats.batch_events == 1
+    assert [r[conv_col] for r in pipe.table.read(spark).collect()] == ["c1"]
     errs = spark.read.parquet(str(tmp_table_path) + "/_errors")
     assert errs.count() == 2
     reasons = {r["_error_reason"] for r in errs.collect()}
-    assert reasons == {"invalid_op", "null_key:conv_id"}
+    assert reasons == {"invalid_op", f"null_key:{conv_col}"}
     assert {r["_batch_id"] for r in errs.collect()} == {0}
 
-    over = make_df(spark, [
+    over = df([
         ("Z", f"c{i}", 0, "u", "t", None, T0, 10 + i, 0) for i in range(5)
     ])
     with pytest.raises(RuntimeError, match="maxErrors"):
         pipe.apply_batch(over, batch_id=1)
+
+
+def test_quarantine_reason_quotes_key_name(spark, tmp_table_path):
+    """A key name holding a quote and a backslash reaches the quarantine
+    reason verbatim: the reason is a SQL string literal."""
+    test_quarantine_and_error_budget(spark, tmp_table_path, conv_col="conv's\\id")
 
 
 def test_all_quarantined_partition_still_advances_offsets(spark, tmp_table_path):

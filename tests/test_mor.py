@@ -264,6 +264,29 @@ def test_mor_delta_pressure_compaction_bounds_read_tax(spark, tmp_path):
     assert sorted(map(tuple, pipes["trig"].read_transcripts().collect())) == a
 
 
+def test_mor_fold_keeps_read_tie_order(spark, tmp_table_path):
+    """A base row and a delta row of one key share (ts, lsn, partition)
+    but differ in payload. The read-time merge keeps the base copy, and
+    a fold of the bucket must write that same row."""
+    from polardbx_tools_spark.lake.merge import merge_into
+
+    table = CdcPipeline(spark, tmp_table_path, bucket_count=1).ensure_table(
+        with_tool=True
+    )
+    for text, mode in (("base", "cow"), ("delta", "mor")):
+        merge_into(spark, table, _sem.make_df(spark, [
+            _sem.ev("U", "c1", 0, text, 10, 1),
+        ]), mode=mode)
+    assert table.snapshot().deltas
+    assert [r["text"] for r in table.read(spark).collect()] == ["base"]
+    merge_into(spark, table, _sem.make_df(spark, [
+        _sem.ev("I", "c2", 0, "other", 20, 2),
+    ]), mode="mor", compact_deltas_over=1)
+    assert not table.snapshot().deltas, "the bucket must have folded"
+    got = {r["conv_id"]: r["text"] for r in table.read(spark).collect()}
+    assert got == {"c1": "base", "c2": "other"}
+
+
 def test_mor_stream_delta_bound_holds_in_every_version(spark, tmp_path):
     """A merge-on-read file tail with ``compact_deltas_over=K`` keeps
     the delta bound in every committed snapshot (the fold rides the

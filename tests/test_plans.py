@@ -9,6 +9,10 @@ import pytest
 
 from tests.conftest import SF_DIR
 
+# py4j round trips one merge_into may make (see
+# test_merge_plan_construction_py4j_budget)
+MERGE_PY4J_BUDGET = 600
+
 
 def plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -78,34 +82,87 @@ def test_merge_plan_single_shuffle_and_bucket_pruned_scan(spark, tmp_path):
     assert 0 < len(read_files) < len(all_files)
 
 
-def test_merge_write_job_has_one_exchange(spark, tmp_path):
-    """Build the merge plan by hand (same ops as merge_into) and assert
-    one Exchange feeds the window+filter chain — dedup and write reuse
-    the same shuffle."""
+def _second_merge(spark, tmp_path, mode):
+    """Merge batch 0 of a small changelog (8 source partitions) into a
+    fresh table; return a thunk that merges batch 1, which rewrites every
+    key of batch 0 — in MOR (K=1) it folds every touched bucket."""
     import datetime as dt
-    from pyspark.sql.window import Window
 
-    df = spark.createDataFrame(
-        [(f"c{i % 7}", i % 3, f"t{i}",
-          dt.datetime(2024, 1, 1) + dt.timedelta(seconds=i), i, 0, 1)
-         for i in range(100)],
-        "conv_id string, turn_idx int, text string, ts timestamp, "
-        "lsn long, part int, _is_src int",
+    from polardbx_tools_spark.changelog.generator import (
+        changelog_schema,
+        transcripts_schema,
     )
-    b = F.pmod(F.xxhash64("conv_id"), F.lit(8))
-    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(2))
-    u = df.withColumn("b", b).withColumn("_salt", salt)
-    w = Window.partitionBy("b", "_salt").orderBy(
-        "conv_id", "turn_idx", F.col("ts").desc(), F.col("lsn").desc()
-    )
-    prev = F.lag("conv_id").over(w)
-    prev_t = F.lag("turn_idx").over(w)
-    out = u.withColumn(
-        "_win",
-        prev.isNull() | (prev != F.col("conv_id")) | (prev_t != F.col("turn_idx")),
-    ).filter("_win")
-    p = plan(out)
-    assert p.count("Exchange") == 1, p
+    from polardbx_tools_spark.lake.merge import KEY_COLS, merge_into
+    from polardbx_tools_spark.lake.table import LakeTable
+
+    table = LakeTable.create(str(tmp_path / mode), transcripts_schema(True),
+                             bucket_count=4, key_cols=KEY_COLS)
+    batches = [spark.createDataFrame([
+        ("I", f"c{i}", t, "user", f"x{i}-{k}", None,
+         dt.datetime(2024, 1, 1) + dt.timedelta(seconds=100 * k + i),
+         1000 * k + 10 * i + t, (i + t) % 8)
+        for i in range(30) for t in range(2)
+    ], changelog_schema(True)) for k in range(2)]
+
+    def merge(k):
+        return merge_into(spark, table, batches[k], batch_id=k, mode=mode,
+                          compact_deltas_over=1 if mode == "mor" else None)
+
+    def second():
+        stats = merge(1)
+        if mode == "mor":  # folded: the touched buckets hold no deltas
+            assert stats.affected_buckets and not table.snapshot().deltas
+        return stats
+
+    merge(0)
+    return second
+
+
+def test_merge_write_job_has_one_exchange(spark, tmp_path, monkeypatch):
+    """merge_into's OWN write plan — COW, and MOR folding every touched
+    bucket — has exactly one Exchange (the (bucket, salt) shuffle) and
+    one Window (the key-change rank): dedup, the folded target rows and
+    the write all reuse that one shuffle."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    for mode in ("cow", "mor"):
+        _second_merge(spark, tmp_path, mode)()
+        p = plan(written[-1])
+        assert len(re.findall(r"\bExchange ", p)) == 1, (mode, p)
+        assert len(re.findall(r"\bWindow \[", p)) == 1, (mode, p)
+        assert "Union" in p, (mode, p)  # the target rows joined the shuffle
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_plan_construction_py4j_budget(spark, tmp_path, monkeypatch, mode):
+    """Building a merge's plans costs a bounded number of py4j round
+    trips: the hot path builds each stage from SQL text. One merge_into
+    of an 8-partition batch (COW; MOR folding every touched bucket)
+    made 2,300-2,750 round trips when its plans were built from Column
+    objects, and 230-330 from SQL text."""
+    import py4j.clientserver
+
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+    calls = [0]
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    second = _second_merge(spark, tmp_path, mode)
+    monkeypatch.setattr(conn, "send_command", counting)
+    second()
+    monkeypatch.undo()
+    assert 0 < calls[0] <= MERGE_PY4J_BUDGET, calls[0]
 
 
 def test_topk_plans_take_ordered_not_global_window(spark):
