@@ -29,11 +29,16 @@ import json
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
+from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from polardbx_tools_spark.changelog.generator import transcripts_schema
 from polardbx_tools_spark.lake import maintenance
@@ -46,9 +51,15 @@ from polardbx_tools_spark.lake.merge import (
     MergeStats,
     merge_into,
 )
-from polardbx_tools_spark.lake.table import LakeTable, committed_lsn, ident, sql_str
+from polardbx_tools_spark.lake.multi import SCHEMA_COL, MultiApplyStats, resume_offsets
+from polardbx_tools_spark.lake.table import LSN_FLOOR, LakeTable, committed_lsn, ident, sql_str
 
 VALID_OPS = ("I", "U", "D")
+
+
+def _errors_dir(table: LakeTable) -> str:
+    """Where a table's quarantined rows and timeout records go."""
+    return os.path.join(table.path, "_errors")
 
 
 @dataclass
@@ -70,6 +81,24 @@ class RunResult:
 
 
 class CdcPipeline:
+    """The CDC engine. ``table_path`` names one lake table; a
+    ``{name: LakeTable}`` map makes a ROUTED pipeline, where each event's
+    ``schema_col`` names its table (the cross-table exactly-once
+    protocol: :mod:`polardbx_tools_spark.lake.multi`). One route or N,
+    ``apply_batch``, ``run`` and ``tail`` take the same steps: one
+    offsets filter, one quarantine pass, one ``merge_into`` per route
+    under one batch timeout, quarantined rows under each route table's
+    ``_errors``, one lineage row per (table, source partition).
+
+    Routed only: ``on_unknown='error'`` raises on an event that routes
+    to no table; 'ignore' consumes and skips it (its LSN still advances
+    the global offsets, as a quarantined row's does).
+    ``max_parallel_tables`` > 1 overlaps the route merges in driver
+    threads; each merge touches only its own table, so the results
+    equal the serial ones, and the crash protocol tolerates any subset
+    of tables having committed. Serial by default: a fixed apply order
+    keeps crash-window tests reproducible."""
+
     #: default merge mode for new pipelines; "cow" rewrites touched
     #: buckets, "mor" appends per-batch delta files (see lake.merge)
     DEFAULT_MERGE_MODE = "cow"
@@ -77,39 +106,50 @@ class CdcPipeline:
     def __init__(
         self,
         spark: SparkSession,
-        table_path: str,
+        table_path: str | dict[str, LakeTable],
         bucket_count: int = 16,
         key_cols: tuple[str, ...] = KEY_COLS,
         max_errors: int = 0,
         merge_mode: str | None = None,
+        schema_col: str = SCHEMA_COL,
+        on_unknown: str = "error",
+        max_parallel_tables: int = 1,
     ):
+        if on_unknown not in ("error", "ignore"):
+            raise ValueError(f"on_unknown must be 'error'|'ignore', got {on_unknown!r}")
         self.spark = spark
-        self.table = LakeTable(table_path)
+        routed = isinstance(table_path, dict)
+        self.tables = dict(sorted(table_path.items())) if routed else {None: LakeTable(table_path)}
+        self.table = None if routed else self.tables[None]
+        self.schema_col = schema_col if routed else None
         self.bucket_count = bucket_count
         self.key_cols = key_cols
         self.max_errors = max_errors
         self.merge_mode = merge_mode or self.DEFAULT_MERGE_MODE
-        self._errors_dir = os.path.join(os.path.abspath(table_path), "_errors")
+        self.on_unknown = on_unknown
+        self.max_parallel_tables = max_parallel_tables
 
     # ----------------------------------------------------------- lifecycle
 
-    def ensure_table(self, with_tool: bool = False) -> LakeTable:
-        if not self.table.exists():
-            LakeTable.create(
-                self.table.path,
-                transcripts_schema(with_tool),
-                bucket_key=self.key_cols[0],
-                bucket_count=self.bucket_count,
-                key_cols=self.key_cols,
-            )
+    def ensure_table(self, with_tool: bool = False) -> LakeTable | None:
+        for t in self.tables.values():
+            if not t.exists():
+                LakeTable.create(
+                    t.path,
+                    transcripts_schema(with_tool),
+                    bucket_key=self.key_cols[0],
+                    bucket_count=self.bucket_count,
+                    key_cols=self.key_cols,
+                )
         return self.table
 
     # ------------------------------------------------------------- filters
 
     def _offsets_filter(self, df: DataFrame) -> DataFrame:
         """Drop events at-or-below the committed offset of their source
-        partition (resume)."""
-        offsets = self.table.offsets()
+        partition (resume); across routes, the per-partition MIN of the
+        route tables' offsets."""
+        offsets = resume_offsets(self.tables)
         if not offsets:
             return df
         # NOTE: a coarse `lsn > min(offsets)` bound would push down to the
@@ -174,53 +214,112 @@ class CdcPipeline:
 
         ``compact_deltas_over`` is the merge-on-read delta-pressure bound
         (see :func:`~polardbx_tools_spark.lake.merge.merge_into`).
+
+        A routed pipeline persists the batch, takes its global offsets
+        and unknown-route count in one tiny pass (≤ #tables ×
+        #source-partitions rows), passes the global offsets to every
+        route's merge and returns a
+        :class:`~polardbx_tools_spark.lake.multi.MultiApplyStats`.
         """
         if not skip_offsets_filter:
             batch = self._offsets_filter(batch)
+        if self.schema_col is None:
+            return self._apply_routes({None: batch}, batch_id, timeout, compact_deltas_over)[None]
+        stats = MultiApplyStats()
+        batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            unknown = set()
+            for route, p, max_lsn, n in batch.groupBy(self.schema_col, PART_COL).agg(
+                F.max(LSN_COL), F.count("*")
+            ).collect():
+                if p is not None and max_lsn is not None:
+                    stats.global_offsets[p] = max(max_lsn, stats.global_offsets.get(p, LSN_FLOOR))
+                if route not in self.tables:
+                    stats.unknown_events += n
+                    unknown.add(str(route))
+            if unknown and self.on_unknown == "error":
+                raise ValueError(
+                    f"{stats.unknown_events} events route to unknown table(s) "
+                    f"{sorted(unknown)[:5]}; pass on_unknown='ignore' to consume-and-skip"
+                )
+            col = ident(self.schema_col)
+            slices = {n: batch.filter(f"{col} = {sql_str(n)}").drop(self.schema_col)
+                      for n in self.tables}
+            per_table = self._apply_routes(
+                slices, batch_id, timeout, compact_deltas_over, stats.global_offsets
+            )
+        finally:
+            batch.unpersist()
+        for name, st in per_table.items():
+            stats.add(name, st)
+        return stats
+
+    def _apply_routes(self, slices: dict, batch_id: int, timeout: float | None,
+                      compact_deltas_over: int | None,
+                      extra_offsets: dict[int, int] | None = None) -> dict:
+        """Merge each route's slice into its table under one batch
+        timeout, then quarantine, gate and write lineage per route."""
         reason = self._quarantine_reason()
         bad = f"({reason}) IS NOT NULL"
-        with self._watchdog(batch_id, timeout):
-            stats = merge_into(
-                self.spark,
-                self.table,
-                batch,
-                batch_id=batch_id,
-                key_cols=self.key_cols,
-                invalid_cond=F.expr(bad),
-                mode=self.merge_mode,
-                compact_deltas_over=compact_deltas_over,
-            )
-        if stats.invalid_events:
-            # rare path: only malformed batches pay a second (filtered) scan
-            batch.filter(bad).selectExpr(
-                "*", f"{reason} AS _error_reason", f"{int(batch_id)} AS _batch_id"
-            ).write.mode("append").parquet(self._errors_dir)
-            if stats.invalid_events > self.max_errors:
-                raise RuntimeError(
-                    f"batch {batch_id}: {stats.invalid_events} malformed events "
-                    f"exceed maxErrors={self.max_errors} "
-                    f"(quarantined at {self._errors_dir}; valid events of this "
-                    f"window were merged idempotently before the gate fired)"
-                )
 
-        self.table.append_lineage(
-            self.spark,
-            [
-                {
-                    "batch_id": batch_id,
-                    "source_partition": p,
-                    "offsets_applied": v["max_lsn"],
-                    "rows_merged": v["winners"],
-                    "conflicts_resolved": v["conflicts"],
-                    "events_per_sec": (
-                        v["events"] / (stats.wall_ms / 1000.0) if stats.wall_ms else 0.0
-                    ),
-                    "wall_ms": stats.wall_ms,
-                }
-                for p, v in sorted(stats.per_partition.items())
-            ],
-        )
-        return stats
+        def merge(name) -> MergeStats:
+            return merge_into(
+                self.spark, self.tables[name], slices[name], batch_id=batch_id,
+                key_cols=self.key_cols, invalid_cond=F.expr(bad), mode=self.merge_mode,
+                extra_offsets=extra_offsets, compact_deltas_over=compact_deltas_over,
+            )
+
+        with self._watchdog(batch_id, timeout):
+            if self.max_parallel_tables > 1 and len(slices) > 1:
+                # Spark runs concurrent jobs FIFO, so one table's write
+                # tail back-fills with the next table's pre-pass. PySpark
+                # pins each thread to its own JVM thread: the wrapper hands
+                # the watchdog's job group to the workers, so its cancel
+                # reaches every route's jobs.
+                merge = inheritable_thread_target(self.spark)(merge)
+                with ThreadPoolExecutor(min(self.max_parallel_tables, len(slices))) as pool:
+                    per_table = dict(zip(slices, pool.map(merge, slices)))
+            else:
+                per_table = {name: merge(name) for name in slices}
+        quarantined = {}
+        for name, stats in per_table.items():
+            if stats.invalid_events:
+                # rare path: only malformed batches pay a second (filtered) scan
+                errors = _errors_dir(self.tables[name])
+                slices[name].filter(bad).selectExpr(
+                    "*", f"{reason} AS _error_reason", f"{int(batch_id)} AS _batch_id"
+                ).write.mode("append").parquet(errors)
+                quarantined[errors] = stats.invalid_events
+        if sum(quarantined.values()) > self.max_errors:
+            raise RuntimeError(
+                f"batch {batch_id}: {sum(quarantined.values())} malformed events "
+                f"exceed maxErrors={self.max_errors} "
+                f"(quarantined at {', '.join(quarantined)}; valid events of this "
+                f"window were merged idempotently before the gate fired)"
+            )
+        for name, stats in per_table.items():
+            self.tables[name].append_lineage(
+                self.spark,
+                [
+                    {
+                        "batch_id": batch_id,
+                        "source_partition": p,
+                        "offsets_applied": v["max_lsn"],
+                        "rows_merged": v["winners"],
+                        "conflicts_resolved": v["conflicts"],
+                        "events_per_sec": (
+                            v["events"] / (stats.wall_ms / 1000.0) if stats.wall_ms else 0.0
+                        ),
+                        "wall_ms": stats.wall_ms,
+                    }
+                    for p, v in sorted(stats.per_partition.items())
+                ],
+            )
+        return per_table
+
+    def _timeout_files(self) -> list[str]:
+        return [os.path.join(_errors_dir(t), "timeout_batches.jsonl")
+                for t in self.tables.values()]
 
     @contextmanager
     def _watchdog(self, batch_id: int, timeout: float | None):
@@ -255,9 +354,8 @@ class CdcPipeline:
             self._record_timeout(batch_id, timeout, error=str(e)[:500])
             raise RuntimeError(
                 f"batch {batch_id} exceeded batch_timeout={timeout}s and was "
-                f"cancelled (quarantined at {self._errors_dir}/"
-                f"timeout_batches.jsonl; offsets did not advance — a resumed "
-                f"run retries this window)"
+                f"cancelled (quarantined at {', '.join(self._timeout_files())}; "
+                f"offsets did not advance — a resumed run retries this window)"
             ) from e
         finally:
             watchdog.cancel()
@@ -275,20 +373,17 @@ class CdcPipeline:
                 f"batch {batch_id} exceeded batch_timeout={timeout}s during "
                 f"its commit tail and had already committed when the "
                 f"watchdog fired; run aborted (overrun recorded at "
-                f"{self._errors_dir}/timeout_batches.jsonl; a resumed run "
+                f"{', '.join(self._timeout_files())}; a resumed run "
                 f"continues AFTER this batch)"
             )
 
     def _record_timeout(self, batch_id: int, timeout: float, **detail) -> None:
-        os.makedirs(self._errors_dir, exist_ok=True)
-        with open(
-            os.path.join(self._errors_dir, "timeout_batches.jsonl"),
-            "a",
-            encoding="utf-8",
-        ) as f:
-            f.write(json.dumps(
-                {"batch_id": batch_id, "timeout_sec": timeout, **detail}
-            ) + "\n")
+        for path in self._timeout_files():
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "a", encoding="utf-8") as f:
+                f.write(json.dumps(
+                    {"batch_id": batch_id, "timeout_sec": timeout, **detail}
+                ) + "\n")
 
     def run(
         self,
@@ -345,10 +440,17 @@ class CdcPipeline:
 
         ``batch_timeout`` aborts + quarantines a batch whose wall time
         exceeds the budget (see :meth:`apply_batch`).
+
+        The window cursor starts at the changelog's first LSN (0 when
+        ``max_lsn`` is given). A resume moves it past the lowest committed
+        offset only when every route table's ledger names the same source
+        partitions (routed commits carry the global offsets, so they
+        differ only before a table's first commit).
         """
         self.ensure_table(with_tool=with_tool)
+        first = 0
         if max_lsn is None:
-            max_lsn = changelog.agg(F.max(LSN_COL)).collect()[0][0]
+            first, max_lsn = changelog.agg(F.min(LSN_COL), F.max(LSN_COL)).collect()[0]
             if max_lsn is None:
                 return RunResult()
         result = RunResult()
@@ -358,13 +460,14 @@ class CdcPipeline:
         batch_id = None
         for pass_i in range(max(1, circle)):
             replay_pass = pass_i > 0
-            lo = 0
+            lo = first
             if not replay_pass:
                 # resume: don't re-scan windows fully below the min offset
-                offsets = self.table.offsets()
-                if offsets:
-                    lo = (min(offsets.values()) + 1) // batch_lsns * batch_lsns
+                ledgers = [t.offsets() for t in self.tables.values()]
+                if ledgers[0] and all(o.keys() == ledgers[0].keys() for o in ledgers):
+                    lo = max(lo, min(min(o.values()) for o in ledgers) + 1)
                 batch_id = lo // batch_lsns
+            lo = lo // batch_lsns * batch_lsns
             while lo <= max_lsn:
                 hi = lo + batch_lsns
                 window = changelog.filter(
@@ -417,13 +520,31 @@ class CdcPipeline:
                     if lag > 0:
                         time.sleep(lag)
                 if compact_every and result.batches % compact_every == 0:
-                    maintenance.compact(self.spark, self.table)
+                    for t in self.tables.values():
+                        maintenance.compact(self.spark, t)
                 lo, batch_id = hi, batch_id + 1
                 if stop_after_batches is not None and result.batches >= stop_after_batches:
                     result.circles = pass_i + 1
                     return result
             result.circles = pass_i + 1
         return result
+
+    def tail(self, source_dir: str, schema: StructType, checkpoint_dir: str,
+             max_files_per_trigger: int | None = None, available_now: bool = True,
+             fmt: str = "parquet", compact_deltas_over: int | None = None,
+             skip_offsets_filter: bool = False) -> StreamingQuery:
+        """Tail a changelog directory, :meth:`apply_batch` per microbatch,
+        under the source contract of :mod:`polardbx_tools_spark.streaming.stream`."""
+        from polardbx_tools_spark.streaming.stream import _read_tail, _start_foreach_batch
+
+        stream = _read_tail(self.spark, source_dir, schema, fmt, max_files_per_trigger)
+
+        def apply(batch_df, batch_id: int) -> None:
+            self.apply_batch(batch_df, batch_id=batch_id,
+                             skip_offsets_filter=skip_offsets_filter,
+                             compact_deltas_over=compact_deltas_over)
+
+        return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
 
     # ---------------------------------------------------------------- read
 

@@ -11,8 +11,24 @@ batch path — one code path for replay and tail.
 
 Exactly-once composition: Spark's streaming checkpoint tracks which
 files were consumed; the engine's snapshot offsets + idempotent merge
-absorb any replayed microbatch after a crash (both layers must agree,
-and they do because apply_batch filters on committed offsets first).
+absorb a microbatch replayed after a crash, because ``apply_batch``
+drops events at or below their partition's committed offset. That
+filter is right only for an ORDERED source.
+
+SOURCE CONTRACT (any offsets-based resume — binlog/Kafka semantics):
+events of one source partition must arrive in non-decreasing LSN order
+across microbatches. An offset is only meaningful under ordered
+delivery; the committed-offsets filter treats a lower-LSN straggler
+arriving AFTER its partition's offset advanced as already consumed and
+drops it. File tails must land files in LSN order: FileStreamSource
+batches by MODIFICATION TIME, so same-millisecond copies can reorder
+windows and lose rows. For a source that
+cannot guarantee order, ``CdcPipeline.tail(skip_offsets_filter=True)``
+(``start_multi_table_cdc_stream(assume_ordered=False)``) skips the
+filter and EVERY event re-merges idempotently — same final state
+(exact ties lose to the target), stragglers land correctly by the
+(ts, lsn, part) total order, at the cost of replay work per restarted
+checkpoint.
 """
 
 from __future__ import annotations
@@ -23,8 +39,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from polardbx_tools_spark.lake.merge import LSN_COL, OP_COL, PART_COL
-from polardbx_tools_spark.lake.multi import apply_multi_table, resume_offsets
-from polardbx_tools_spark.lake.table import LakeTable, committed_lsn, ident
+from polardbx_tools_spark.lake.table import LakeTable
 from polardbx_tools_spark.pipeline import CdcPipeline
 
 
@@ -93,14 +108,8 @@ def start_cdc_stream(
     pipe = CdcPipeline(spark, table_path, bucket_count=bucket_count,
                        merge_mode=merge_mode, max_errors=max_errors)
     pipe.ensure_table(with_tool="tool" in schema.fieldNames())
-
-    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
-
-    def apply(batch_df, batch_id: int) -> None:
-        pipe.apply_batch(batch_df, batch_id=batch_id,
-                         compact_deltas_over=compact_deltas_over)
-
-    return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
+    return pipe.tail(source_dir, schema, checkpoint_dir, max_files_per_trigger,
+                     available_now, fmt, compact_deltas_over)
 
 
 def start_multi_table_cdc_stream(
@@ -121,41 +130,13 @@ def start_multi_table_cdc_stream(
     compact_deltas_over: int | None = None,
 ) -> StreamingQuery:
     """Multi-table CDC tail: one mixed changelog stream routed by its
-    ``schema_col`` to N lake tables per microbatch — the streaming shape
-    of :func:`polardbx_tools_spark.lake.multi.apply_multi_table`
-    (reference: batch-tool's ``-t t1,t2`` + frodo per-event schema,
-    continuously).
-
-    Exactly-once composition is three layers deep: Spark's checkpoint
-    tracks consumed files; each microbatch is pre-filtered by the
-    CROSS-TABLE min committed offsets (so a replayed batch skips what
-    every table already holds); and the per-table idempotent merges
-    absorb the crash-split remainder (a batch committed to table A but
-    not B replays into both, A no-ops). ``on_unknown='ignore'`` is the
-    tail default — an unroutable event is consumed-and-skipped like a
-    quarantined row, never stalls the stream; pass 'error' to stop on
-    routing bugs.
-
-    SOURCE CONTRACT (same as the single-table tail / any offsets-based
-    resume — binlog/Kafka semantics): events of one source partition
-    must arrive in non-decreasing LSN order across microbatches. An
-    offset is only meaningful under ordered delivery; the
-    committed-offsets pre-filter treats a lower-LSN straggler arriving
-    AFTER its partition's offset advanced as already-consumed. File
-    tails must land files in LSN order (see tests for the landing
-    discipline — FileStreamSource batches by MODIFICATION TIME, so
-    same-millisecond copies can reorder windows). For a source that
-    cannot guarantee order, pass ``assume_ordered=False``: the
-    pre-filter is skipped and EVERY event re-merges idempotently —
-    same final state (exact ties lose to the target), stragglers land
-    correctly by the (ts, lsn, part) total order, at the cost of replay
-    work per restarted checkpoint.
-
-    ``compact_deltas_over``: the MOR delta-pressure bound (max delta
-    files per bucket), kept by every routed table's merge inside its
-    own commit — without it a long ``merge_mode='mor'`` tail
-    accumulates deltas unboundedly. The fold is part of the merge
-    commit, so it cannot race the merge."""
+    ``schema_col`` to N lake tables, created from the stream's payload
+    columns — ``CdcPipeline.tail`` of a routed pipeline (reference:
+    batch-tool's ``-t t1,t2`` + frodo per-event schema, continuously).
+    ``on_unknown='ignore'`` is the tail default: an unroutable event is
+    consumed and skipped and never stalls the stream.
+    ``assume_ordered=False`` skips the offsets filter (see the source
+    contract above)."""
     meta = {OP_COL, LSN_COL, PART_COL, schema_col}
     payload = StructType([f for f in schema.fields if f.name not in meta])
     tables: dict[str, LakeTable] = {}
@@ -165,23 +146,11 @@ def start_multi_table_cdc_stream(
             path, payload, bucket_key=key_cols[0],
             bucket_count=bucket_count, key_cols=key_cols,
         )
-
-    stream = _read_tail(spark, source_dir, schema, fmt, max_files_per_trigger)
-
-    def apply(batch_df, batch_id: int) -> None:
-        ro = resume_offsets(tables) if assume_ordered else None
-        if ro:
-            batch_df = batch_df.filter(
-                f"{ident(LSN_COL)} > {committed_lsn(ro, PART_COL)}"
-            )
-        apply_multi_table(
-            spark, tables, batch_df, batch_id=batch_id,
-            key_cols=key_cols, schema_col=schema_col,
-            mode=merge_mode, on_unknown=on_unknown,
-            compact_deltas_over=compact_deltas_over,
-        )
-
-    return _start_foreach_batch(stream, apply, checkpoint_dir, available_now)
+    pipe = CdcPipeline(spark, tables, key_cols=key_cols, merge_mode=merge_mode,
+                       schema_col=schema_col, on_unknown=on_unknown)
+    return pipe.tail(source_dir, schema, checkpoint_dir, max_files_per_trigger,
+                     available_now, fmt, compact_deltas_over,
+                     skip_offsets_filter=not assume_ordered)
 
 
 def start_windowed_counts_stream(

@@ -118,3 +118,46 @@ def test_batch_timeout_after_commit_records_overrun(spark, tmp_path, monkeypatch
     with open(os.path.join(path, "_errors", "timeout_batches.jsonl")) as f:
         recs = [json.loads(line) for line in f]
     assert recs == [{"batch_id": 0, "timeout_sec": budget, "committed": True}]
+
+
+def test_batch_timeout_cancels_parallel_route_merges(spark, tmp_path, monkeypatch):
+    """A routed run with ``max_parallel_tables=2`` merges its routes in
+    driver threads. A slow Spark job inside a route merge must still be
+    cancelled at the wall budget, and the timeout recorded under every
+    route table's _errors with no offsets advanced."""
+    from polardbx_tools_spark import pipeline as pipeline_mod
+    from polardbx_tools_spark.lake.table import LakeTable
+
+    cl = generate_changelog(
+        spark, ChangelogSpec(n_events=200, n_convs=10, seed=5)
+    ).withColumn(
+        "schema", F.when(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 0, "a").otherwise("b")
+    )
+
+    @F.udf("long")
+    def slow(x):
+        time.sleep(2.0)
+        return x
+
+    real = pipeline_mod.merge_into
+
+    def slow_merge(*args, **kwargs):
+        # 20 rows in one task: 40 s unless the watchdog cancels it
+        spark.range(0, 20, 1, 1).select(slow("id")).collect()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "merge_into", slow_merge)
+    tables = {n: LakeTable(str(tmp_path / n)) for n in ("a", "b")}
+    pipe = CdcPipeline(spark, tables, bucket_count=4, max_parallel_tables=2)
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="was cancelled"):
+        pipe.run(cl, batch_lsns=1000, max_lsn=200, with_tool=True,
+                 batch_timeout=3.0)
+    wall = time.time() - t0
+    assert wall < 30, f"watchdog did not cancel the route merges ({wall:.0f}s)"
+    for t in tables.values():
+        assert t.offsets() == {}
+        with open(os.path.join(t.path, "_errors", "timeout_batches.jsonl")) as f:
+            recs = [json.loads(line) for line in f]
+        assert [(r["batch_id"], r["timeout_sec"]) for r in recs] == [(0, 3.0)]
+        assert "cancel" in recs[0]["error"].lower()

@@ -12,7 +12,9 @@ Tails (or batch-replays) a changelog and merges it into the lake table:
 In batch mode the LSN-windowed apply loop runs to the end of the
 changelog; in --stream mode a Structured Streaming file tail keeps
 following the directory. Both paths share the same merge/offset logic,
-so a batch backfill followed by a streaming tail is seamless.
+so a batch backfill followed by a streaming tail is seamless. With
+--tables the same pipeline routes each event to the table its
+--route-by column names.
 """
 
 from __future__ import annotations
@@ -46,7 +48,7 @@ def main() -> None:
                     help="MULTI-TABLE routed apply (batch-tool -t t1,t2 "
                          "analog): comma list of name=path lake tables; "
                          "the changelog's --route-by column selects the "
-                         "destination. Replaces --table in batch mode.")
+                         "destination. Replaces --table.")
     ap.add_argument("--route-by", default="schema",
                     help="changelog column naming the destination table "
                          "(with --tables; default 'schema')")
@@ -73,80 +75,47 @@ def main() -> None:
     from polardbx_tools_spark.pipeline import CdcPipeline
 
     spark = SparkSession.builder.getOrCreate()  # master/conf from spark-submit
-    if args.tables and args.stream:
-        raise SystemExit("--tables is batch-mode only (route a validated "
-                         "changelog; see lake/multi.py)")
     if not args.tables and not args.table:
         raise SystemExit("one of --table / --tables is required")
     # reject knobs a mode cannot honor instead of silently dropping them
     if args.stream and args.compact_every:
         raise SystemExit("--compact-every is batch-mode only "
                          "(--stream supports --compact-deltas-over)")
-    if args.tables and (args.compact_every or args.max_errors):
-        raise SystemExit("--compact-every/--max-errors are single-table "
-                         "only (--tables supports --compact-deltas-over)")
+    target = args.table
     if args.tables:
-        from polardbx_tools_spark.lake.multi import run_multi_table
         from polardbx_tools_spark.lake.table import LakeTable
-        from polardbx_tools_spark.changelog.generator import changelog_schema
-        from pyspark.sql.types import StructType
 
-        payload = StructType([
-            f for f in changelog_schema(with_tool=args.with_tool).fields
-            if f.name in
-            ("conv_id", "turn_idx", "text", "ts", "tool")
-        ])
-        tabs: dict = {}
+        target = {}
         for spec in args.tables.split(","):
             name, _, path = spec.partition("=")
             if not path:
                 raise SystemExit(f"--tables entry {spec!r} is not name=path")
-            t = LakeTable(path)
-            tabs[name] = t if t.exists() else LakeTable.create(
-                path, payload, bucket_key="conv_id",
-                bucket_count=args.buckets, key_cols=("conv_id", "turn_idx"),
-            )
-        stats = run_multi_table(
-            spark, tabs, spark.read.parquet(args.changelog),
-            batch_lsns=args.batch_lsns, schema_col=args.route_by,
-            mode=args.merge_mode, monitor=True,
-            on_unknown=args.on_unknown,
-            compact_deltas_over=args.compact_deltas_over,
-        )
-        applied = sum(
-            s.upserts + s.deletes
-            for st in stats for s in st.per_table.values()
-        )
-        print(f"done: {len(stats)} batches x {len(tabs)} tables, "
-              f"{applied} events merged")
-        return
+            target[name] = LakeTable(path)
+    pipe = CdcPipeline(
+        spark, target, bucket_count=args.buckets,
+        max_errors=args.max_errors, merge_mode=args.merge_mode,
+        schema_col=args.route_by, on_unknown=args.on_unknown,
+    )
     if args.stream:
         from polardbx_tools_spark.changelog.generator import changelog_schema
-        from polardbx_tools_spark.streaming import start_cdc_stream
 
         if not args.checkpoint:
             raise SystemExit("--stream requires --checkpoint")
-        q = start_cdc_stream(
-            spark,
+        pipe.ensure_table(with_tool=args.with_tool)
+        schema = changelog_schema(with_tool=args.with_tool)
+        if args.tables:
+            schema = schema.add(args.route_by, "string")
+        q = pipe.tail(
             args.changelog,
-            changelog_schema(with_tool=args.with_tool),
-            args.table,
-            checkpoint_dir=args.checkpoint,
-            bucket_count=args.buckets,
+            schema,
+            args.checkpoint,
             available_now=False,
-            merge_mode=args.merge_mode,
             compact_deltas_over=args.compact_deltas_over,
-            max_errors=args.max_errors,
         )
         q.awaitTermination()
     else:
-        cl = spark.read.parquet(args.changelog)
-        pipe = CdcPipeline(
-            spark, args.table, bucket_count=args.buckets,
-            max_errors=args.max_errors, merge_mode=args.merge_mode,
-        )
         res = pipe.run(
-            cl,
+            spark.read.parquet(args.changelog),
             batch_lsns=args.batch_lsns,
             with_tool=args.with_tool,
             max_events_per_sec=args.max_events_per_sec,
