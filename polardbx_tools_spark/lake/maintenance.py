@@ -29,7 +29,11 @@ def compact(
     buckets: list[int] | None = None,
     drop_tombstones: bool = False,
 ) -> dict:
-    """Rewrite each (selected) bucket's files into few key-sorted files.
+    """Rewrite the (selected) buckets' files into files of about
+    ``target_file_rows`` rows, key-sorted: a bucket at least that big
+    gets its own files, and adjacent smaller buckets share one, so
+    compacting a table of small buckets or of shared delta files never
+    writes one small file per bucket.
 
     Merge-on-read DELTA files fold into the new base here: the read
     below applies the key-level merge, and committing the rewrite as
@@ -54,10 +58,9 @@ def compact(
     if not todo:
         return {"buckets": 0, "files_before": 0, "files_after": 0}
 
-    files_before = sum(
-        len(snap.files.get(str(b), [])) + len(snap.deltas.get(str(b), []))
-        for b in todo
-    )
+    files_before = len(set(snap.base_files(todo) + snap.delta_files(todo)))
+    # a shared file also holds other buckets' rows: read() keeps only
+    # todo's, and the file stays listed under the other buckets
     df = table.read(
         spark, buckets=todo, include_bookkeeping=True, include_deleted=True
     )
@@ -68,20 +71,41 @@ def compact(
     next_version = snap.version + 1
     staging = table.staging_dir(next_version)
     n_rows = df.count()
-    per_bucket_files = max(1, (n_rows // max(1, len(todo))) // target_file_rows + 1)
-    salt = F.pmod(F.xxhash64(F.col(snap.bucket_key)), F.lit(per_bucket_files))
     out_cols = [f.name for f in snap.schema.fields] + list(BOOKKEEPING_COLS)
-    (
-        df.withColumn("b", bucket)
-        .repartition(F.col("b"), salt)
-        .sortWithinPartitions(snap.bucket_key)
-        .select(*out_cols, "b")
-        .write.partitionBy("b")
-        .mode("overwrite")
-        .parquet(staging)
-    )
+    n_files = max(1, -(-n_rows // target_file_rows))
+    runs = None
+    if n_files < len(todo):
+        # buckets smaller than a target-size file SHARE files: runs of
+        # adjacent buckets of about target_file_rows rows, one file per
+        # run under p=<its first bucket>, listed under each of its buckets
+        first: dict[int, int] = {}
+        runs = {b: first.setdefault(i * n_files // len(todo), b)
+                for i, b in enumerate(todo)}
+        run_of = F.create_map(*[F.lit(x) for b, f in runs.items() for x in (b, f)])
+        (
+            df.withColumn("b", bucket)
+            .withColumn("p", run_of[F.col("b")])
+            .repartition(F.col("p"))
+            .sortWithinPartitions("b", snap.bucket_key)
+            .select(*out_cols, "p")
+            .write.partitionBy("p")
+            .mode("overwrite")
+            .parquet(staging)
+        )
+    else:
+        per_bucket_files = n_rows // len(todo) // target_file_rows + 1
+        salt = F.pmod(F.xxhash64(F.col(snap.bucket_key)), F.lit(per_bucket_files))
+        (
+            df.withColumn("b", bucket)
+            .repartition(F.col("b"), salt)
+            .sortWithinPartitions(snap.bucket_key)
+            .select(*out_cols, "b")
+            .write.partitionBy("b")
+            .mode("overwrite")
+            .parquet(staging)
+        )
 
-    replaced = table.staged_files(staging, todo)
+    replaced = table.staged_files(staging, todo, runs)
     # expected_version guards the MANIFEST against a merge committing
     # between compact's snapshot read and this commit (the compacted
     # file lists would silently revert the merge's buckets while its
@@ -92,7 +116,7 @@ def compact(
     table.commit(replaced_buckets=replaced, offsets_updates={},
                  properties={"op": "compact"},
                  expected_version=snap.version)
-    files_after = sum(len(v) for v in replaced.values())
+    files_after = len({f for fl in replaced.values() for f in fl})
     return {"buckets": len(todo), "files_before": files_before,
             "files_after": files_after, "rows": n_rows}
 

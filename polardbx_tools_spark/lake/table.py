@@ -26,10 +26,26 @@ Layout::
         v<NNNNNNNN>.json   # immutable snapshot manifests
         _current           # pointer file, flipped via os.replace (atomic)
       data/
-        v<NNNNNNNN>/b=<bucket>/*.parquet   # files staged by the commit
-                                           # (base rewrites OR MOR deltas —
-                                           # the manifest says which)
+        v<NNNNNNNN>-<id>/b=<bucket>/*.parquet  # one bucket's files: a base
+                                               # rewrite, or the delta of a
+                                               # merge that folds buckets
+        v<NNNNNNNN>-<id>/*.parquet  # SHARED merge-on-read delta files of a
+                                    # merge that folds no bucket: each holds
+                                    # the rows of several buckets, sorted by
+                                    # (bucket, key, seq desc)
+        v<NNNNNNNN>-<id>/p=<bucket>/*.parquet  # SHARED base files of a
+                                               # compaction: a run of small
+                                               # adjacent buckets from
+                                               # <bucket> on
       _lineage/*.parquet   # per-microbatch metrics (append-only)
+
+The manifest says which files are base and which are deltas, and lists a
+shared file under every bucket it holds. A file stays live while any
+bucket lists it, so a shared file can also hold rows of buckets that no
+longer list it (folded or compacted since): every scan of a shared file
+keeps only the rows of the buckets that list it, ``bucket_sql IN
+(...)``. A bucket's delta pressure is counted in delta COMMITS (distinct
+staging directories), not files.
 
 Crash-safety: data files are staged under the *next* version's directory
 before the pointer flips; a crash between staging and commit leaves
@@ -136,23 +152,43 @@ class Snapshot:
         return StructType.fromJson(json.loads(self.schema_json))
 
     def all_files(self) -> list[str]:
-        """Every referenced data file (base + deltas) — liveness for
-        vacuum and file-diff for incremental reads."""
-        return [f for fl in self.files.values() for f in fl] + [
-            f for fl in self.deltas.values() for f in fl
-        ]
+        """Every referenced data file (base + deltas), each once —
+        liveness for vacuum and file-diff for incremental reads."""
+        return list(dict.fromkeys(self.base_files() + self.delta_files()))
+
+    @staticmethod
+    def _listed(lists: dict[str, list[str]], buckets: list[int] | None) -> list[str]:
+        want = None if buckets is None else {str(b) for b in buckets}
+        return list(dict.fromkeys(
+            f for b, fl in lists.items() if want is None or b in want for f in fl
+        ))
 
     def base_files(self, buckets: list[int] | None = None) -> list[str]:
-        if buckets is None:
-            return [f for fl in self.files.values() for f in fl]
-        want = {str(b) for b in buckets}
-        return [f for b, fl in self.files.items() if b in want for f in fl]
+        """The base files of ``buckets`` (all when None), each once: a
+        shared file is listed under every bucket it holds."""
+        return self._listed(self.files, buckets)
 
     def delta_files(self, buckets: list[int] | None = None) -> list[str]:
-        if buckets is None:
-            return [f for fl in self.deltas.values() for f in fl]
-        want = {str(b) for b in buckets}
-        return [f for b, fl in self.deltas.items() if b in want for f in fl]
+        """The delta files of ``buckets`` (all when None), each once."""
+        return self._listed(self.deltas, buckets)
+
+    def listing_buckets(self, buckets: list[int] | None = None) -> dict[str, list[int]]:
+        """File path -> the buckets (of ``buckets``, all when None) whose
+        base or delta list names it."""
+        want = None if buckets is None else {int(b) for b in buckets}
+        out: dict[str, list[int]] = {}
+        for lists in (self.files, self.deltas):
+            for b, fl in lists.items():
+                if want is None or int(b) in want:
+                    for f in fl:
+                        out.setdefault(f, []).append(int(b))
+        return out
+
+    def delta_commits(self) -> dict[str, int]:
+        """Delta commits per bucket: the distinct staging directories of
+        its delta files. A commit adds one file to a bucket, or shared
+        files that hold it, so files would overcount commits."""
+        return {b: len({os.path.dirname(f) for f in fl}) for b, fl in self.deltas.items()}
 
 
 def suggest_bucket_count(
@@ -291,18 +327,42 @@ class LakeTable:
         key = ident(key_col or snap.bucket_key)
         return f"CAST(pmod(xxhash64({key}), {int(snap.bucket_count)}) AS INT)"
 
-    def scan(self, spark: SparkSession, snap: Snapshot, files: list[str]) -> DataFrame:
+    def scan(
+        self, spark: SparkSession, snap: Snapshot, files: list[str],
+        buckets: list[int] | None = None,
+    ) -> DataFrame:
         """The raw rows of ``files`` (paths relative to the root) under
         ``snap``'s schema, bookkeeping columns included: no tombstone
         filter and no read-time merge of deltas — the merge's fold
         resolves those in its own window. Old files missing newly-added
-        columns read as NULL."""
+        columns read as NULL.
+
+        A shared file (one not under a ``b=<bucket>`` dir) keeps only the
+        rows of the buckets that list it in ``snap`` — of ``buckets``,
+        when given. It also holds rows of buckets that do not list it:
+        other buckets' rows, or rows a fold or compaction has since
+        superseded (and whose tombstones it may have dropped). Files are
+        scanned in groups of the same listing buckets, one filter each."""
         schema = _with_bookkeeping(snap.schema)
-        if not files:
+        listed = snap.listing_buckets(buckets)
+        groups: dict[tuple[int, ...] | None, list[str]] = {}
+        for f in files:
+            if os.path.basename(os.path.dirname(f)).startswith("b="):
+                groups.setdefault(None, []).append(f)
+            elif listed.get(f):
+                groups.setdefault(tuple(sorted(listed[f])), []).append(f)
+        if not groups:
             return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f) for f in files]
-        )
+        bucket = self.bucket_sql(snapshot=snap)
+        out = None
+        for only, fl in groups.items():
+            df = spark.read.schema(schema).parquet(
+                *[os.path.join(self.path, f) for f in fl]
+            )
+            if only is not None:
+                df = df.filter(f"{bucket} IN ({', '.join(map(str, only))})")
+            out = df if out is None else out.unionByName(df)
+        return out
 
     def read(
         self,
@@ -324,19 +384,23 @@ class LakeTable:
         merge uses — ``(SEQ_TS, SEQ_LSN, SEQ_PART) desc``, base winning
         exact ties (a replayed event folded into the base and still
         present as a delta is a no-op). A pure-COW snapshot (no deltas)
-        adds NO merge window: the plan is the plain pruned scan.
+        adds NO merge window: the plan is the plain pruned scan. A shared
+        file is scanned only for the buckets that list it (see
+        :meth:`scan`).
         """
         snap = self.snapshot(version)
         base_files = snap.base_files(buckets)
         delta_files = snap.delta_files(buckets)
         if not delta_files:
-            df = self.scan(spark, snap, base_files)
+            df = self.scan(spark, snap, base_files, buckets)
         else:
             keys = ", ".join(ident(k) for k in snap.key_cols or [snap.bucket_key])
             unioned = (
-                self.scan(spark, snap, base_files).selectExpr("*", "0 AS _is_delta")
+                self.scan(spark, snap, base_files, buckets)
+                .selectExpr("*", "0 AS _is_delta")
                 .unionByName(
-                    self.scan(spark, snap, delta_files).selectExpr("*", "1 AS _is_delta")
+                    self.scan(spark, snap, delta_files, buckets)
+                    .selectExpr("*", "1 AS _is_delta")
                 )
             )
             df = (
@@ -407,21 +471,34 @@ class LakeTable:
             f"v{next_version:08d}-{uuid.uuid4().hex[:8]}",
         )
 
-    def staged_files(self, staging: str, buckets: list[int]) -> dict[int, list[str]]:
-        """Data files a writer staged under ``staging`` (its
-        ``b=<bucket>/*.parquet`` partition dirs), per bucket, as paths
-        relative to the table root. Every bucket of ``buckets`` is
-        present; one the write left no rows in maps to ``[]``."""
-        staged: dict[int, list[str]] = {b: [] for b in buckets}
+    def staged_files(
+        self, staging: str, buckets: list[int], runs: dict[int, int] | None = None,
+    ) -> dict[int, list[str]]:
+        """Data files a writer staged under ``staging``, per bucket, as
+        paths relative to the table root: a ``b=<bucket>`` partition
+        dir's files under its bucket, the files of a ``p=<first>`` dir (a
+        compaction's run of small buckets) under every bucket ``b`` with
+        ``runs[b] == first``, and the shared files directly under
+        ``staging`` under every bucket of ``buckets``. Every bucket of
+        ``buckets`` is present; one the write left no rows in maps to
+        ``[]``."""
+        def parquet(d: str) -> list[str]:
+            return sorted(os.path.join(rel, d, fn)
+                          for fn in os.listdir(os.path.join(staging, d))
+                          if fn.endswith(".parquet"))
+
         rel = os.path.relpath(staging, self.path)
+        shared = parquet("") if os.path.isdir(staging) else []
+        staged: dict[int, list[str]] = {b: list(shared) for b in buckets}
         if os.path.isdir(staging):
             for d in os.listdir(staging):
                 if d.startswith("b="):
-                    staged[int(d.split("=", 1)[1])] = sorted(
-                        os.path.join(rel, d, fn)
-                        for fn in os.listdir(os.path.join(staging, d))
-                        if fn.endswith(".parquet")
-                    )
+                    staged[int(d.split("=", 1)[1])] = parquet(d)
+                elif d.startswith("p="):
+                    first = int(d.split("=", 1)[1])
+                    for b, f in (runs or {}).items():
+                        if f == first:
+                            staged[b] = parquet(d)
         return staged
 
     def commit(

@@ -423,7 +423,7 @@ class CdcPipeline:
         (steady-state file-count control for long tails).
         ``compact_deltas_over=K`` is the merge-on-read DELTA-PRESSURE
         bound: each batch's merge folds any touched bucket already
-        holding K delta files, inside the merge commit (see
+        holding K delta commits, inside the merge commit (see
         :func:`~polardbx_tools_spark.lake.merge.merge_into`) — bounds
         read amplification on a long MOR tail in every committed
         snapshot without rewriting cold buckets. Typical:

@@ -198,24 +198,21 @@ def test_mor_deltas_tracked_and_cleared(spark, tmp_table_path):
 
 def assert_delta_bound_every_version(table, k):
     """No committed snapshot of ``table`` holds more than ``k`` delta
-    files in any bucket."""
+    commits in any bucket."""
     for v in table.snapshots():
-        deltas = table.snapshot(v).deltas
-        worst = max((len(fl) for fl in deltas.values()), default=0)
-        assert worst <= k, (
-            f"v{v}: a bucket holds {worst} > {k} delta files: "
-            f"{ {b: len(fl) for b, fl in deltas.items()} }"
-        )
+        commits = table.snapshot(v).delta_commits()
+        worst = max(commits.values(), default=0)
+        assert worst <= k, f"v{v}: a bucket holds {worst} > {k} delta commits: {commits}"
 
 
 def fold_versions(table, k):
     """Versions whose commit folded a bucket: it held at least ``k``
-    delta files at the previous version and none at this one."""
+    delta commits at the previous version and no delta at this one."""
     versions = table.snapshots()
     out = []
     for prev, v in zip(versions, versions[1:]):
-        before, after = table.snapshot(prev).deltas, table.snapshot(v).deltas
-        if any(len(fl) >= k and not after.get(b) for b, fl in before.items()):
+        before, after = table.snapshot(prev).delta_commits(), table.snapshot(v).deltas
+        if any(n >= k and not after.get(b) for b, n in before.items()):
             out.append(v)
     return out
 
@@ -225,8 +222,8 @@ def test_mor_delta_pressure_compaction_bounds_read_tax(spark, tmp_path):
     bucket's delta list grows ~one file per touching batch (unbounded
     read-side merge, the round-3 scale wart); with
     ``run(compact_deltas_over=K)`` a merge folds any touched bucket
-    already holding K delta files inside its own commit, so a reader
-    merges at most K deltas per bucket in EVERY committed snapshot —
+    already holding K delta commits inside its own commit, so a reader
+    merges at most K delta commits per bucket in EVERY committed snapshot —
     and the final state is byte-identical to the untriggered run."""
     from polardbx_tools_spark.changelog.generator import (
         ChangelogSpec,
@@ -245,12 +242,12 @@ def test_mor_delta_pressure_compaction_bounds_read_tax(spark, tmp_path):
         pipe.run(cl, batch_lsns=50, **kwargs)  # 24 microbatches
         pipes[name] = pipe
     plain, trig = pipes["plain"].table.snapshot(), pipes["trig"].table.snapshot()
-    max_plain = max(len(v) for v in plain.deltas.values())
+    max_plain = max(plain.delta_commits().values())
     assert max_plain > 2 * K, f"fixture tail too short: {max_plain}"
-    max_trig = max((len(v) for v in trig.deltas.values()), default=0)
+    max_trig = max(trig.delta_commits().values(), default=0)
     assert max_trig <= K, (
         f"delta backlog must stay bounded by the trigger, got {max_trig}: "
-        f"{ {b: len(v) for b, v in trig.deltas.items()} }"
+        f"{trig.delta_commits()}"
     )
     assert_delta_bound_every_version(pipes["trig"].table, K)
     # compaction must not disturb state, offsets, or resume invariants
@@ -376,3 +373,206 @@ def test_cow_reads_have_no_merge_window(spark, tmp_table_path):
     pipe.run(cl, batch_lsns=300)
     plan = pipe.table.read(spark)._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan
+
+
+# ------------------------------------------------ shared delta files
+
+SHARED_K = 2
+PAYLOAD = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _file_df(spark, rows, path):
+    """``rows`` read back from parquet under ``path``, as a file tail's
+    microbatch is: its size is known to be small, so an unfolded
+    merge-on-read merge of it takes the narrow plan and writes a shared
+    delta file."""
+    _sem.make_df(spark, rows).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _convs_by_bucket(spark, table):
+    """Bucket -> conversation ids ``c0``..``c63`` that hash to it."""
+    ids = spark.createDataFrame([(f"c{i}",) for i in range(64)], "conv_id string")
+    by_b = {}
+    for r in ids.selectExpr("conv_id", f"{table.bucket_sql()} AS b").collect():
+        by_b.setdefault(r["b"], []).append(r["conv_id"])
+    return by_b
+
+
+@pytest.fixture(scope="module")
+def shared_deltas(spark, tmp_path_factory):
+    """A 4-bucket MOR table with ``compact_deltas_over=2`` and three
+    batches: A touches every bucket and B buckets 0 and 1, both unfolded
+    (shared delta files); C touches buckets 0 and 2 and folds buckets 0
+    and 1 (the two at K, 1 untouched), whose shared files also hold
+    buckets 2 and 3. Returns the pipeline, the events as pandas, and the
+    committed version after each batch."""
+    path = str(tmp_path_factory.mktemp("shared") / "t")
+    pipe = CdcPipeline(spark, path, bucket_count=4, merge_mode="mor")
+    table = pipe.ensure_table(with_tool=True)
+    by_b = _convs_by_bucket(spark, table)
+    ev = _sem.ev
+    lsn = iter(range(1, 1000))
+
+    def e(op, conv, turn, text, ts):
+        n = next(lsn)
+        return ev(op, conv, turn, text, ts, n, part=n % 2)
+
+    a = [e("I", c, t, "a", 10) for b in range(4) for c in by_b[b][:2] for t in (0, 1)]
+    a += [
+        e("U", by_b[0][0], 0, "a-older", 5),   # within-batch loser
+        e("D", by_b[0][1], 1, None, 50),       # tombstone in a shared file
+        e("D", by_b[3][0], 1, None, 50),
+    ]
+    b = [e("U", c, 0, "b", 60) for bb in (0, 1) for c in by_b[bb][:2]]
+    b += [e("I", by_b[1][0], 2, "b", 60)]
+    c = [
+        e("U", by_b[0][1], 0, "c", 70),
+        e("I", by_b[0][1], 1, "late", 20),     # older than the tombstone
+        e("U", by_b[2][0], 1, "c", 70),
+    ]
+    versions, stats = [table.current_version()], []
+    files = tmp_path_factory.mktemp("shared-batches")
+    for i, rows in enumerate((a, b, c)):
+        stats.append(pipe.apply_batch(_file_df(spark, rows, str(files / str(i))), i,
+                                      compact_deltas_over=SHARED_K))
+        versions.append(table.current_version())
+    events = _sem.make_df(spark, a + b + c).toPandas()
+    return pipe, events, versions, stats, by_b
+
+
+def _bucket_of(table, df):
+    return {r["b"] for r in df.selectExpr(f"{table.bucket_sql()} AS b").distinct().collect()}
+
+
+def test_mor_partial_fold_of_shared_deltas_equals_replay_oracle(spark, shared_deltas):
+    """Folding buckets 0 and 1 reads shared delta files that also hold
+    buckets 2 and 3: the fold must keep only the folded buckets' rows,
+    so no other bucket gains a delta commit, the bound holds in every
+    version, and the state equals the replay oracle. Bucket 1 folds
+    although batch C does not touch it: it is at K."""
+    from oracle import normalize, replay_oracle
+
+    pipe, events, versions, stats, _ = shared_deltas
+    table = pipe.table
+    before, after = (table.snapshot(v) for v in versions[2:4])
+    assert [s.affected_buckets for s in stats] == [[0, 1, 2, 3], [0, 1], [0, 2]]
+    assert before.delta_commits() == {"0": 2, "1": 2, "2": 1, "3": 1}
+    assert after.delta_commits() == {"2": 2, "3": 1}, "buckets 0 and 1 fold"
+    assert after.files.get("0") and after.files.get("1")
+    assert not after.files.keys() - {"0", "1"}
+    assert_delta_bound_every_version(table, SHARED_K)
+    got = normalize(pipe.read_transcripts().toPandas(), PAYLOAD)
+    want = normalize(replay_oracle(events, PAYLOAD), PAYLOAD)
+    import pandas.testing as pdt
+
+    pdt.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_mor_read_buckets_of_shared_deltas_keeps_only_those_buckets(spark, shared_deltas):
+    """``read(buckets=[b])`` over shared delta files returns bucket b's
+    rows only, and the buckets' reads add up to the whole table."""
+    pipe, _, versions, _, _ = shared_deltas
+    table = pipe.table
+    for v in versions[1:]:
+        whole = table.read(spark, version=v, include_deleted=True).count()
+        per_bucket = 0
+        for b in range(4):
+            df = table.read(spark, buckets=[b], version=v, include_deleted=True)
+            assert _bucket_of(table, df) <= {b}, (v, b)
+            per_bucket += df.count()
+        assert per_bucket == whole, v
+
+
+def test_mor_incremental_changes_scans_each_new_file_once(spark, shared_deltas, monkeypatch):
+    """A shared delta file is listed under several buckets; the file
+    diff of ``incremental_changes`` scans it once and emits one row per
+    changed key."""
+    from polardbx_tools_spark.lake.table import LakeTable
+
+    pipe, _, versions, _, by_b = shared_deltas
+    table = pipe.table
+    scanned = []
+    scan = LakeTable.scan
+
+    def spy(self, spark, snap, files, *args, **kwargs):
+        scanned.append(list(files))
+        return scan(self, spark, snap, files, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "scan", spy)
+    rows = table.incremental_changes(spark, versions[1], versions[2]).collect()
+    old, cur = (set(table.snapshot(v).all_files()) for v in versions[1:3])
+    new = cur - old
+    assert len(scanned) == 1 and sorted(scanned[0]) == sorted(new), scanned
+    keys = sorted((r["conv_id"], r["turn_idx"]) for r in rows)
+    want = sorted([(c, 0) for bb in (0, 1) for c in by_b[bb][:2]] + [(by_b[1][0], 2)])
+    assert keys == want
+
+
+def test_mor_snapshot_lists_each_shared_delta_file_once(shared_deltas):
+    """A shared delta file sits under several buckets in the manifest;
+    ``delta_files`` and ``all_files`` name it once."""
+    pipe, _, versions, _, _ = shared_deltas
+    snap = pipe.table.snapshot(versions[1])
+    shared = set(snap.deltas["0"]) & set(snap.deltas["1"])
+    assert shared, "batch A must write files shared by buckets 0 and 1"
+    for files in (snap.delta_files(), snap.delta_files([0, 1]), snap.all_files()):
+        assert len(files) == len(set(files)), files
+    assert set(snap.delta_files()) == {f for fl in snap.deltas.values() for f in fl}
+
+
+def test_mor_compact_some_buckets_of_shared_deltas_equals_replay_oracle(spark, tmp_path):
+    """A shared file stays live while any bucket lists it. Batch A puts
+    key k (bucket 0) and j (bucket 1) in one shared delta file, batch B
+    deletes k in one shared by buckets 0 and 2. Compacting buckets 0 and
+    2 with ``drop_tombstones=True`` drops k's tombstone, and A's file,
+    still listed under bucket 1, holds k's insert: every read must skip
+    the rows of the buckets that no longer list a file, or k comes back."""
+    import pandas.testing as pdt
+
+    from oracle import normalize, replay_oracle
+    from polardbx_tools_spark.lake.maintenance import compact
+
+    pipe = CdcPipeline(spark, str(tmp_path / "t"), bucket_count=4, merge_mode="mor")
+    table = pipe.ensure_table(with_tool=True)
+    by_b = _convs_by_bucket(spark, table)
+    (k, k2), j, m = by_b[0][:2], by_b[1][0], by_b[2][0]
+    ev = _sem.ev
+    batches = [
+        [ev("I", k, 0, "a", 10, 1), ev("I", k2, 0, "a", 10, 2), ev("I", j, 0, "a", 10, 3)],
+        [ev("D", k, 0, None, 20, 4), ev("I", m, 0, "b", 20, 5)],
+        [ev("U", j, 0, "c", 30, 6), ev("I", m, 1, "c", 30, 7)],
+        [ev("U", m, 0, "d", 40, 8)],
+    ]
+    def apply(i, **kwargs):
+        pipe.apply_batch(_file_df(spark, batches[i], str(tmp_path / str(i))), i, **kwargs)
+
+    for i in range(2):
+        apply(i)
+    snap = table.snapshot()
+    assert set(snap.deltas["0"]) & set(snap.deltas["1"])
+    assert set(snap.deltas["0"]) & set(snap.deltas["2"])
+
+    res = compact(spark, table, buckets=[0, 2], drop_tombstones=True)
+    snap = table.snapshot()
+    assert set(snap.deltas) == {"1"} and res["files_after"] == 1
+    assert snap.files["0"] == snap.files["2"], "small buckets share one file"
+
+    def check(n_batches):
+        events = _sem.make_df(spark, sum(batches[:n_batches], [])).toPandas()
+        want = normalize(replay_oracle(events, PAYLOAD), PAYLOAD)
+        got = normalize(pipe.read_transcripts().toPandas(), PAYLOAD)
+        pdt.assert_frame_equal(got, want, check_dtype=False)
+        assert table.read(spark, include_deleted=True).count() == len(want)
+        for b in range(4):
+            rows = table.read(spark, buckets=[b], include_deleted=True)
+            assert _bucket_of(table, rows) <= {b}, b
+
+    check(2)
+    apply(2)
+    check(3)
+    # folding buckets 1 and 2 reads the base file bucket 2 shares with
+    # bucket 0 (k2) and the delta files bucket 1 shares with 0 and 2
+    apply(3, compact_deltas_over=1)
+    assert not table.snapshot().deltas
+    check(4)

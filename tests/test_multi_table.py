@@ -289,10 +289,10 @@ def test_multi_table_mor_tail_compaction_bounds_deltas(spark, tmp_path):
     }
     for name, t in tables.items():
         snap = t.snapshot()
-        max_deltas = max((len(v) for v in snap.deltas.values()), default=0)
+        max_deltas = max(snap.delta_commits().values(), default=0)
         assert max_deltas <= K, (
             f"{name}: delta backlog must stay bounded by the trigger, "
-            f"got {max_deltas}: { {b: len(v) for b, v in snap.deltas.items()} }"
+            f"got {max_deltas}: {snap.delta_commits()}"
         )
         compacts = fold_versions(t, K)
         assert compacts, f"{name}: trigger never fired — fixture not hot enough"
@@ -350,7 +350,7 @@ def test_streaming_multi_table_mor_tail_compacts_mid_stream(spark, tmp_path):
     for name, p in paths.items():
         t = LakeTable(p)
         snap = t.snapshot()
-        max_deltas = max((len(v) for v in snap.deltas.values()), default=0)
+        max_deltas = max(snap.delta_commits().values(), default=0)
         assert max_deltas <= K, f"{name}: backlog {max_deltas} > {K}"
         compacts = fold_versions(t, K)
         assert compacts, f"{name}: no mid-stream compaction happened"

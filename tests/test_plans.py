@@ -85,7 +85,11 @@ def test_merge_plan_single_shuffle_and_bucket_pruned_scan(spark, tmp_path):
 def _second_merge(spark, tmp_path, mode):
     """Merge batch 0 of a small changelog (8 source partitions) into a
     fresh table; return a thunk that merges batch 1, which rewrites every
-    key of batch 0 — in MOR (K=1) it folds every touched bucket."""
+    key of batch 0 — in MOR (K=1) it folds every touched bucket, in
+    ``mor-unfolded`` and ``mor-local`` (no K) it folds none. The
+    ``mor-unfolded`` batches are read from parquet, as a file tail's
+    are, so their size is known to be small; the others are local rows
+    of unknown size."""
     import datetime as dt
 
     from polardbx_tools_spark.changelog.generator import (
@@ -95,6 +99,7 @@ def _second_merge(spark, tmp_path, mode):
     from polardbx_tools_spark.lake.merge import KEY_COLS, merge_into
     from polardbx_tools_spark.lake.table import LakeTable
 
+    merge_mode = mode.split("-")[0]
     table = LakeTable.create(str(tmp_path / mode), transcripts_schema(True),
                              bucket_count=4, key_cols=KEY_COLS)
     batches = [spark.createDataFrame([
@@ -103,15 +108,23 @@ def _second_merge(spark, tmp_path, mode):
          1000 * k + 10 * i + t, (i + t) % 8)
         for i in range(30) for t in range(2)
     ], changelog_schema(True)) for k in range(2)]
+    if mode == "mor-unfolded":
+        for k, df in enumerate(batches):
+            df.write.parquet(str(tmp_path / f"batch{k}"))
+        batches = [spark.read.parquet(str(tmp_path / f"batch{k}")) for k in range(2)]
 
     def merge(k):
-        return merge_into(spark, table, batches[k], batch_id=k, mode=mode,
+        return merge_into(spark, table, batches[k], batch_id=k, mode=merge_mode,
                           compact_deltas_over=1 if mode == "mor" else None)
 
     def second():
         stats = merge(1)
+        deltas = table.snapshot().deltas
         if mode == "mor":  # folded: the touched buckets hold no deltas
-            assert stats.affected_buckets and not table.snapshot().deltas
+            assert stats.affected_buckets and not deltas
+        if mode == "mor-unfolded":  # not folded: the touched buckets hold deltas
+            assert stats.affected_buckets and all(
+                str(b) in deltas for b in stats.affected_buckets)
         return stats
 
     merge(0)
@@ -141,13 +154,66 @@ def test_merge_write_job_has_one_exchange(spark, tmp_path, monkeypatch):
         assert "Union" in p, (mode, p)  # the target rows joined the shuffle
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_unfolded_mor_merge_is_one_spark_job(spark, tmp_path, monkeypatch):
+    """A merge-on-read merge that folds no bucket is ONE Spark job — no
+    stats pre-pass, no second pass — and its write plan has no Exchange:
+    the dedup window runs in place over the coalesced batch, which is
+    written as one shared delta file. With a pre-pass and the merge
+    shuffle it ran 4 jobs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    second = _second_merge(spark, tmp_path, "mor-unfolded")
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    jobs = _jobs_of(spark, "unfolded-mor-merge", second)
+    assert len(jobs) == 1, sorted(jobs)
+    assert len(written) == 1
+    p = plan(written[0])
+    assert "Exchange" not in p, p
+    assert len(re.findall(r"\bWindow \[", p)) == 1, p
+
+
+def test_unfolded_mor_merge_of_batch_not_known_small_shuffles(spark, tmp_path):
+    """The narrow plan runs the whole batch in one task, so only a batch
+    known to be small takes it. Local rows have no size estimate: their
+    unfolded merge-on-read merge takes the pre-pass and the shuffle, and
+    writes one delta file per touched bucket."""
+    from polardbx_tools_spark.lake.table import LakeTable
+
+    second = _second_merge(spark, tmp_path, "mor-local")
+    jobs = _jobs_of(spark, "local-rows-mor-merge", second)
+    assert len(jobs) > 1, sorted(jobs)
+    deltas = LakeTable(str(tmp_path / "mor-local")).snapshot().deltas
+    assert len(deltas) == 4
+    for b, files in deltas.items():
+        assert all(f.split("/")[-2] == f"b={b}" for f in files), files
+
+
+def _jobs_of(spark, group, thunk):
+    """The ids of the Spark jobs ``thunk()`` runs, through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        thunk()
+    finally:
+        sc.setJobGroup("", "")
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor", "mor-unfolded"])
 def test_merge_plan_construction_py4j_budget(spark, tmp_path, monkeypatch, mode):
     """Building a merge's plans costs a bounded number of py4j round
     trips: the hot path builds each stage from SQL text. One merge_into
     of an 8-partition batch (COW; MOR folding every touched bucket)
     made 2,300-2,750 round trips when its plans were built from Column
-    objects, and 230-330 from SQL text."""
+    objects, and 230-330 from SQL text. An unfolded MOR merge builds
+    one narrow plan."""
     import py4j.clientserver
 
     conn = py4j.clientserver.ClientServerConnection

@@ -42,7 +42,7 @@ def main() -> None:
                     help="compact the table after every N microbatches")
     ap.add_argument("--compact-deltas-over", type=int, default=None,
                     help="merge-on-read delta-pressure bound: fold any "
-                         "touched bucket already holding K delta files, "
+                         "touched bucket already holding K delta commits, "
                          "inside the merge commit")
     ap.add_argument("--tables", default=None,
                     help="MULTI-TABLE routed apply (batch-tool -t t1,t2 "
