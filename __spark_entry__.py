@@ -569,14 +569,14 @@ def _q_cdc_multi_table_apply(spark, sf):
     """Multi-table routed apply (ref: batch-tool `-t t1,t2` table list,
     cmd/CommandUtil.java; frodo per-event schema, Frodo.java:299-305):
     ONE mixed changelog routed by its `schema` column to TWO LakeTables
-    in one pass (lake/multi.py) — per-table single-shuffle merges,
-    global offsets committed to every table. Oracle: per-route
-    last-writer-wins SQL, labelled union."""
+    in one pass (a routed CdcPipeline, lake/multi.py's protocol) —
+    per-table single-shuffle merges, global offsets committed to every
+    table. Oracle: per-route last-writer-wins SQL, labelled union."""
     import atexit
     import shutil
 
-    from polardbx_tools_spark.lake.multi import apply_multi_table
     from polardbx_tools_spark.lake.table import LakeTable
+    from polardbx_tools_spark.pipeline import CdcPipeline
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType, TimestampType,
     )
@@ -615,9 +615,9 @@ def _q_cdc_multi_table_apply(spark, sf):
             for name in ("clicks", "txns")
         }
         # overlap the two independent per-table merges (results are
-        # identical to the serial path; see apply_multi_table)
-        apply_multi_table(spark, tables, changelog, batch_id=0,
-                          max_parallel_tables=2)
+        # identical to the serial path; see CdcPipeline)
+        CdcPipeline(spark, tables, max_parallel_tables=2).apply_batch(
+            changelog, batch_id=0, skip_offsets_filter=True)
         out = None
         for name in ("clicks", "txns"):
             part = tables[name].read(spark).select(

@@ -1,14 +1,8 @@
 from polardbx_tools_spark.lake.table import LakeTable, Snapshot
 from polardbx_tools_spark.lake.merge import merge_into, MergeStats
-from polardbx_tools_spark.lake.multi import (
-    MultiApplyStats,
-    apply_multi_table,
-    resume_offsets,
-    run_multi_table,
-)
+from polardbx_tools_spark.lake.multi import MultiApplyStats, resume_offsets
 
 __all__ = [
     "LakeTable", "Snapshot", "merge_into", "MergeStats",
-    "apply_multi_table", "run_multi_table", "resume_offsets",
-    "MultiApplyStats",
+    "resume_offsets", "MultiApplyStats",
 ]

@@ -29,20 +29,20 @@ writes), and stronger than the reference, which replays through INSERT
 IGNORE with no offset ledger at all.
 
 Routing itself is :class:`~polardbx_tools_spark.pipeline.CdcPipeline`
-built with a name -> table map: the one CDC engine, so a routed batch
-is quarantined, gated, timed out and lineage-logged like a one-table
-batch. Each route is a filter over the one persisted batch scan, and
-each per-table merge keeps the single-shuffle plan. The functions
-below are thin wrappers that build such a pipeline.
+built with a name -> table map: the one CDC engine and the only public
+way to apply a routed changelog (``apply_batch``, ``run``, ``tail``),
+so a routed batch is quarantined, gated, timed out and lineage-logged
+like a one-table batch. Each route is a filter over the one persisted
+batch scan, and each per-table merge keeps the single-shuffle plan.
+This module holds the protocol's pieces that pipeline uses: the routed
+batch stats and the cross-table resume point.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-
-from polardbx_tools_spark.lake.merge import KEY_COLS, MergeStats
+from polardbx_tools_spark.lake.merge import MergeStats
 from polardbx_tools_spark.lake.table import LakeTable
 
 SCHEMA_COL = "schema"
@@ -53,7 +53,8 @@ class MultiApplyStats(MergeStats):
     """One routed batch: each route table's merge stats, and their sums
     (event-time bounds: their span) in the :class:`MergeStats` fields,
     so ``CdcPipeline.run`` counts, paces and monitors it like a
-    one-table batch."""
+    one-table batch. ``wall_ms`` is the routed ``apply_batch``'s own
+    wall clock, not a sum: route merges may overlap."""
 
     per_table: dict[str, MergeStats] = field(default_factory=dict)
     unknown_events: int = 0
@@ -62,7 +63,7 @@ class MultiApplyStats(MergeStats):
     def add(self, name: str, st: MergeStats) -> None:
         self.per_table[name] = st
         for f in ("batch_events", "invalid_events", "rows_written", "upserts",
-                  "deletes", "conflicts_resolved", "affected_buckets", "wall_ms"):
+                  "deletes", "conflicts_resolved", "affected_buckets"):
             setattr(self, f, getattr(self, f) + getattr(st, f))
         self.min_ts = min(filter(None, (self.min_ts, st.min_ts)), default=None)
         self.max_ts = max(filter(None, (self.max_ts, st.max_ts)), default=None)
@@ -79,53 +80,3 @@ def resume_offsets(tables: dict[str, LakeTable]) -> dict[int, int]:
     ledgers = [t.offsets() for t in tables.values()]
     common = set.intersection(*map(set, ledgers)) if ledgers else set()
     return {p: min(o[p] for o in ledgers) for p in common}
-
-
-def apply_multi_table(
-    spark: SparkSession,
-    tables: dict[str, LakeTable],
-    batch: DataFrame,
-    batch_id: int = 0,
-    key_cols: tuple[str, ...] = KEY_COLS,
-    schema_col: str = SCHEMA_COL,
-    mode: str = "cow",
-    on_unknown: str = "error",
-    max_parallel_tables: int = 1,
-    compact_deltas_over: int | None = None,
-) -> MultiApplyStats:
-    """Apply one mixed changelog microbatch, whose ``schema_col`` names
-    each event's table, to every routed table with no offsets filter:
-    ``CdcPipeline.apply_batch(skip_offsets_filter=True)``. See
-    :class:`~polardbx_tools_spark.pipeline.CdcPipeline` for
-    ``on_unknown`` and ``max_parallel_tables``."""
-    from polardbx_tools_spark.pipeline import CdcPipeline
-
-    pipe = CdcPipeline(spark, tables, key_cols=key_cols, merge_mode=mode,
-                       schema_col=schema_col, on_unknown=on_unknown,
-                       max_parallel_tables=max_parallel_tables)
-    return pipe.apply_batch(batch, batch_id, skip_offsets_filter=True,
-                            compact_deltas_over=compact_deltas_over)
-
-
-def run_multi_table(
-    spark: SparkSession,
-    tables: dict[str, LakeTable],
-    changelog: DataFrame,
-    batch_lsns: int = 10_000_000,
-    key_cols: tuple[str, ...] = KEY_COLS,
-    schema_col: str = SCHEMA_COL,
-    mode: str = "cow",
-    on_unknown: str = "error",
-    monitor: bool = False,
-    compact_deltas_over: int | None = None,
-) -> list[MultiApplyStats]:
-    """LSN-windowed batch loop over a mixed changelog: ``CdcPipeline.run``
-    of a routed pipeline. Returns the stats of the windows that held
-    events after the offsets filter."""
-    from polardbx_tools_spark.pipeline import CdcPipeline
-
-    pipe = CdcPipeline(spark, tables, key_cols=key_cols, merge_mode=mode,
-                       schema_col=schema_col, on_unknown=on_unknown)
-    res = pipe.run(changelog, batch_lsns=batch_lsns, monitor=monitor,
-                   compact_deltas_over=compact_deltas_over)
-    return [st for st in res.stats if st.global_offsets]

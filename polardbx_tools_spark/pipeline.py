@@ -219,12 +219,15 @@ class CdcPipeline:
         and unknown-route count in one tiny pass (≤ #tables ×
         #source-partitions rows), passes the global offsets to every
         route's merge and returns a
-        :class:`~polardbx_tools_spark.lake.multi.MultiApplyStats`.
+        :class:`~polardbx_tools_spark.lake.multi.MultiApplyStats` whose
+        ``wall_ms`` is the wall clock of that pass, the route merges and
+        the quarantine and lineage writes.
         """
         if not skip_offsets_filter:
             batch = self._offsets_filter(batch)
         if self.schema_col is None:
             return self._apply_routes({None: batch}, batch_id, timeout, compact_deltas_over)[None]
+        t0 = time.time()
         stats = MultiApplyStats()
         batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -252,6 +255,7 @@ class CdcPipeline:
             batch.unpersist()
         for name, st in per_table.items():
             stats.add(name, st)
+        stats.wall_ms = int((time.time() - t0) * 1000)
         return stats
 
     def _apply_routes(self, slices: dict, batch_id: int, timeout: float | None,
@@ -534,7 +538,12 @@ class CdcPipeline:
              fmt: str = "parquet", compact_deltas_over: int | None = None,
              skip_offsets_filter: bool = False) -> StreamingQuery:
         """Tail a changelog directory, :meth:`apply_batch` per microbatch,
-        under the source contract of :mod:`polardbx_tools_spark.streaming.stream`."""
+        under the source contract of :mod:`polardbx_tools_spark.streaming.stream`.
+
+        A routed tail fails the microbatch of an event that routes to no
+        table (``on_unknown='error'``, the default; the removed
+        ``start_multi_table_cdc_stream`` defaulted to 'ignore'), which
+        stops the query: build with ``on_unknown='ignore'`` to skip them."""
         from polardbx_tools_spark.streaming.stream import _read_tail, _start_foreach_batch
 
         stream = _read_tail(self.spark, source_dir, schema, fmt, max_files_per_trigger)
@@ -551,6 +560,11 @@ class CdcPipeline:
     def read_transcripts(self, order: bool = True) -> DataFrame:
         """Final-state view: tombstones filtered, stable turn ordering
         (the input_hint per-turn-equality invariant is checked over this)."""
+        if self.table is None:
+            raise ValueError(
+                f"a routed pipeline has no one table to read; read a route "
+                f"table with LakeTable.read: {sorted(self.tables)}"
+            )
         df = self.table.read(self.spark)
         if order:
             df = df.orderBy("conv_id", "turn_idx")

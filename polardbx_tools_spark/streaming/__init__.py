@@ -1,6 +1,5 @@
 from polardbx_tools_spark.streaming.stream import (
     start_cdc_stream,
-    start_multi_table_cdc_stream,
     start_dedup_stream,
     start_embedding_dedup_stream,
     start_windowed_counts_stream,
@@ -8,7 +7,6 @@ from polardbx_tools_spark.streaming.stream import (
 
 __all__ = [
     "start_cdc_stream",
-    "start_multi_table_cdc_stream",
     "start_dedup_stream",
     "start_embedding_dedup_stream",
     "start_windowed_counts_stream",

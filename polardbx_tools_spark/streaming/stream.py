@@ -22,13 +22,11 @@ delivery; the committed-offsets filter treats a lower-LSN straggler
 arriving AFTER its partition's offset advanced as already consumed and
 drops it. File tails must land files in LSN order: FileStreamSource
 batches by MODIFICATION TIME, so same-millisecond copies can reorder
-windows and lose rows. For a source that
-cannot guarantee order, ``CdcPipeline.tail(skip_offsets_filter=True)``
-(``start_multi_table_cdc_stream(assume_ordered=False)``) skips the
-filter and EVERY event re-merges idempotently — same final state
-(exact ties lose to the target), stragglers land correctly by the
-(ts, lsn, part) total order, at the cost of replay work per restarted
-checkpoint.
+windows and lose rows. For a source that cannot guarantee order,
+``CdcPipeline.tail(skip_offsets_filter=True)`` skips the filter and
+EVERY event re-merges idempotently — same final state (exact ties lose
+to the target), stragglers land correctly by the (ts, lsn, part) total
+order, at the cost of replay work per restarted checkpoint.
 """
 
 from __future__ import annotations
@@ -38,8 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from polardbx_tools_spark.lake.merge import LSN_COL, OP_COL, PART_COL
-from polardbx_tools_spark.lake.table import LakeTable
 from polardbx_tools_spark.pipeline import CdcPipeline
 
 
@@ -110,47 +106,6 @@ def start_cdc_stream(
     pipe.ensure_table(with_tool="tool" in schema.fieldNames())
     return pipe.tail(source_dir, schema, checkpoint_dir, max_files_per_trigger,
                      available_now, fmt, compact_deltas_over)
-
-
-def start_multi_table_cdc_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    table_paths: dict[str, str],
-    checkpoint_dir: str,
-    bucket_count: int = 16,
-    schema_col: str = "schema",
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    fmt: str = "parquet",
-    merge_mode: str = "cow",
-    on_unknown: str = "ignore",
-    assume_ordered: bool = True,
-    compact_deltas_over: int | None = None,
-) -> StreamingQuery:
-    """Multi-table CDC tail: one mixed changelog stream routed by its
-    ``schema_col`` to N lake tables, created from the stream's payload
-    columns — ``CdcPipeline.tail`` of a routed pipeline (reference:
-    batch-tool's ``-t t1,t2`` + frodo per-event schema, continuously).
-    ``on_unknown='ignore'`` is the tail default: an unroutable event is
-    consumed and skipped and never stalls the stream.
-    ``assume_ordered=False`` skips the offsets filter (see the source
-    contract above)."""
-    meta = {OP_COL, LSN_COL, PART_COL, schema_col}
-    payload = StructType([f for f in schema.fields if f.name not in meta])
-    tables: dict[str, LakeTable] = {}
-    for name, path in table_paths.items():
-        t = LakeTable(path)
-        tables[name] = t if t.exists() else LakeTable.create(
-            path, payload, bucket_key=key_cols[0],
-            bucket_count=bucket_count, key_cols=key_cols,
-        )
-    pipe = CdcPipeline(spark, tables, key_cols=key_cols, merge_mode=merge_mode,
-                       schema_col=schema_col, on_unknown=on_unknown)
-    return pipe.tail(source_dir, schema, checkpoint_dir, max_files_per_trigger,
-                     available_now, fmt, compact_deltas_over,
-                     skip_offsets_filter=not assume_ordered)
 
 
 def start_windowed_counts_stream(

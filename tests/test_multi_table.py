@@ -15,8 +15,9 @@ from polardbx_tools_spark.changelog.generator import (
     generate_changelog,
 )
 from polardbx_tools_spark.lake.merge import merge_into
-from polardbx_tools_spark.lake.multi import apply_multi_table, resume_offsets
+from polardbx_tools_spark.lake.multi import resume_offsets
 from polardbx_tools_spark.lake.table import LakeTable
+from polardbx_tools_spark.pipeline import CdcPipeline
 from oracle import normalize, replay_oracle
 from test_mor import fold_versions
 
@@ -66,7 +67,7 @@ def _oracle_for(mixed_pdf, name):
 def test_routed_state_equals_per_table_oracle(spark, tmp_path):
     mixed = _mixed_changelog(spark)
     tables = _make_tables(tmp_path)
-    st = apply_multi_table(spark, tables, mixed, batch_id=0)
+    st = CdcPipeline(spark, tables).apply_batch(mixed, batch_id=0, skip_offsets_filter=True)
     pdf = mixed.toPandas()
     for name, t in tables.items():
         got = normalize(t.read(spark).toPandas(), PAYLOAD)
@@ -89,7 +90,7 @@ def test_crash_between_table_commits_converges(spark, tmp_path):
     b0 = cl_all.filter(F.col("source_lsn") < mid)
     b1 = cl_all.filter(F.col("source_lsn") >= mid)
     tables = _make_tables(tmp_path)
-    st0 = apply_multi_table(spark, tables, b0, batch_id=0)
+    st0 = CdcPipeline(spark, tables).apply_batch(b0, batch_id=0, skip_offsets_filter=True)
 
     # crash-split second batch: alpha commits, beta never does
     g1 = {
@@ -116,7 +117,7 @@ def test_crash_between_table_commits_converges(spark, tmp_path):
         F.create_map(*pairs)[F.col("source_partition")], floor
     )
     replay = cl_all.filter(F.col("source_lsn") > committed)
-    apply_multi_table(spark, tables, replay, batch_id=2)
+    CdcPipeline(spark, tables).apply_batch(replay, batch_id=2, skip_offsets_filter=True)
 
     pdf = cl_all.toPandas()
     for name, t in tables.items():
@@ -141,8 +142,6 @@ def test_streaming_multi_table_tail(spark, tmp_path):
     import glob
     import os
     import shutil
-
-    from polardbx_tools_spark.streaming import start_multi_table_cdc_stream
 
     cl = _mixed_changelog(spark, n_events=1200, seed=17)
     src = str(tmp_path / "src")
@@ -174,17 +173,16 @@ def test_streaming_multi_table_tail(spark, tmp_path):
 
     land(first, "a", 4)
 
-    paths = {"alpha": str(tmp_path / "alpha"), "beta": str(tmp_path / "beta")}
+    tables = _make_tables(tmp_path)
+    pipe = CdcPipeline(spark, tables, on_unknown="ignore")
     kwargs = dict(
-        spark=spark, source_dir=src, schema=first.schema,
-        table_paths=paths, bucket_count=4,
+        source_dir=src, schema=first.schema,
         max_files_per_trigger=2, available_now=True,
     )
-    q = start_multi_table_cdc_stream(
+    q = pipe.tail(
         checkpoint_dir=str(tmp_path / "ckpt"), **kwargs
     )
     q.awaitTermination()
-    tables = {n: LakeTable(p) for n, p in paths.items()}
     pdf_first = first.toPandas()
     for name, t in tables.items():
         got = normalize(t.read(spark).toPandas(), PAYLOAD)
@@ -194,7 +192,7 @@ def test_streaming_multi_table_tail(spark, tmp_path):
 
     # tail grows; SAME checkpoint resumes and applies only the new files
     land(later, "b", 2)
-    q2 = start_multi_table_cdc_stream(
+    q2 = pipe.tail(
         checkpoint_dir=str(tmp_path / "ckpt"), **kwargs
     )
     q2.awaitTermination()
@@ -208,7 +206,7 @@ def test_streaming_multi_table_tail(spark, tmp_path):
 
     # FULL replay from a fresh checkpoint: offsets filter + idempotent
     # merges -> state unchanged
-    q3 = start_multi_table_cdc_stream(
+    q3 = pipe.tail(
         checkpoint_dir=str(tmp_path / "ckpt2"), **kwargs
     )
     q3.awaitTermination()
@@ -225,14 +223,12 @@ def test_streaming_multi_table_tail(spark, tmp_path):
 def test_streaming_unordered_source_with_assume_ordered_false(spark, tmp_path):
     """A file tail that CANNOT guarantee LSN-ordered arrival (here:
     windows landed in reverse LSN order with identical mtimes) still
-    converges with ``assume_ordered=False`` — the offsets pre-filter is
+    converges with ``skip_offsets_filter=True`` — the offsets pre-filter is
     skipped and the idempotent merges apply stragglers by the total
     order."""
     import glob
     import os
     import shutil
-
-    from polardbx_tools_spark.streaming import start_multi_table_cdc_stream
 
     cl = _mixed_changelog(spark, n_events=800, seed=23)
     src = str(tmp_path / "src")
@@ -247,16 +243,16 @@ def test_streaming_unordered_source_with_assume_ordered_false(spark, tmp_path):
         shutil.copy(f, dst)
         os.utime(dst, (now, now))
 
-    paths = {"alpha": str(tmp_path / "alpha"), "beta": str(tmp_path / "beta")}
-    q = start_multi_table_cdc_stream(
-        spark, src, cl.schema, paths, str(tmp_path / "ckpt"),
-        bucket_count=4, max_files_per_trigger=1, available_now=True,
-        assume_ordered=False,
+    tables = _make_tables(tmp_path)
+    q = CdcPipeline(spark, tables, on_unknown="ignore").tail(
+        src, cl.schema, str(tmp_path / "ckpt"),
+        max_files_per_trigger=1, available_now=True,
+        skip_offsets_filter=True,
     )
     q.awaitTermination()
     pdf = cl.toPandas()
-    for name, p in paths.items():
-        got = normalize(LakeTable(p).read(spark).toPandas(), PAYLOAD)
+    for name, t in tables.items():
+        got = normalize(t.read(spark).toPandas(), PAYLOAD)
         pd.testing.assert_frame_equal(
             got, _oracle_for(pdf, name), check_dtype=False
         )
@@ -264,20 +260,18 @@ def test_streaming_unordered_source_with_assume_ordered_false(spark, tmp_path):
 
 def test_multi_table_mor_tail_compaction_bounds_deltas(spark, tmp_path):
     """Long multi-table MOR tail (32 LSN windows, 2 routed tables) with
-    the delta-pressure trigger wired through ``run_multi_table``
+    the delta-pressure trigger wired through a routed ``CdcPipeline.run``
     (round-4 verdict gap #1): the per-bucket delta backlog stays ≤ K in
     EVERY table at end of tail, the trigger demonstrably fired (a merge
     commit folded a bucket that held K deltas), final
     states equal the replay oracle, offsets are complete, and a full
     replay is a no-op."""
-    from polardbx_tools_spark.lake.multi import run_multi_table
-
     cl = _mixed_changelog(spark, n_events=1600, seed=13)
     K = 4
     tables = _make_tables(tmp_path)
-    out = run_multi_table(
-        spark, tables, cl, batch_lsns=50, mode="mor", compact_deltas_over=K
-    )
+    pipe = CdcPipeline(spark, tables, merge_mode="mor")
+    out = [st for st in pipe.run(cl, batch_lsns=50, compact_deltas_over=K).stats
+           if st.global_offsets]
     assert len(out) >= 32, f"tail too short: {len(out)} windows"
 
     pdf = cl.toPandas()
@@ -304,9 +298,8 @@ def test_multi_table_mor_tail_compaction_bounds_deltas(spark, tmp_path):
 
     # replay the full changelog: cross-table resume fast-forwards past
     # the consumed LSN space — no windows run, state untouched
-    assert run_multi_table(
-        spark, tables, cl, batch_lsns=50, mode="mor", compact_deltas_over=K
-    ) == []
+    assert [st for st in pipe.run(cl, batch_lsns=50, compact_deltas_over=K).stats
+            if st.global_offsets] == []
     for name, t in tables.items():
         got = normalize(t.read(spark).toPandas(), PAYLOAD)
         pd.testing.assert_frame_equal(
@@ -323,8 +316,6 @@ def test_streaming_multi_table_mor_tail_compacts_mid_stream(spark, tmp_path):
     import os
     import shutil
 
-    from polardbx_tools_spark.streaming import start_multi_table_cdc_stream
-
     cl = _mixed_changelog(spark, n_events=1000, seed=29)
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -339,16 +330,15 @@ def test_streaming_multi_table_mor_tail_compacts_mid_stream(spark, tmp_path):
         os.utime(dst, (base + i, base + i))
 
     K = 2
-    paths = {"alpha": str(tmp_path / "alpha"), "beta": str(tmp_path / "beta")}
-    q = start_multi_table_cdc_stream(
-        spark, src, cl.schema, paths, str(tmp_path / "ckpt"),
-        bucket_count=4, max_files_per_trigger=1, available_now=True,
-        merge_mode="mor", compact_deltas_over=K,
+    tables = _make_tables(tmp_path)
+    q = CdcPipeline(spark, tables, merge_mode="mor", on_unknown="ignore").tail(
+        src, cl.schema, str(tmp_path / "ckpt"),
+        max_files_per_trigger=1, available_now=True,
+        compact_deltas_over=K,
     )
     q.awaitTermination()
     pdf = cl.toPandas()
-    for name, p in paths.items():
-        t = LakeTable(p)
+    for name, t in tables.items():
         snap = t.snapshot()
         max_deltas = max(snap.delta_commits().values(), default=0)
         assert max_deltas <= K, f"{name}: backlog {max_deltas} > {K}"
@@ -368,9 +358,10 @@ def test_unknown_route_rejected_or_consumed(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="unknown table"):
-        apply_multi_table(spark, tables, mixed, batch_id=0)
+        CdcPipeline(spark, tables).apply_batch(mixed, batch_id=0, skip_offsets_filter=True)
     # consume-and-skip: offsets advance, no rows land anywhere
-    st = apply_multi_table(spark, tables, mixed, batch_id=0, on_unknown="ignore")
+    st = CdcPipeline(spark, tables, on_unknown="ignore").apply_batch(
+        mixed, batch_id=0, skip_offsets_filter=True)
     assert st.unknown_events == 400
     for t in tables.values():
         assert t.read(spark).count() == 0
@@ -384,9 +375,9 @@ def test_parallel_apply_equals_serial(spark, tmp_path):
     mixed = _mixed_changelog(spark)
     serial = _make_tables(tmp_path / "s")
     par = _make_tables(tmp_path / "p")
-    st_s = apply_multi_table(spark, serial, mixed, batch_id=0)
-    st_p = apply_multi_table(spark, par, mixed, batch_id=0,
-                             max_parallel_tables=2)
+    st_s = CdcPipeline(spark, serial).apply_batch(mixed, batch_id=0, skip_offsets_filter=True)
+    st_p = CdcPipeline(spark, par, max_parallel_tables=2).apply_batch(
+        mixed, batch_id=0, skip_offsets_filter=True)
     assert st_p.global_offsets == st_s.global_offsets
     for name in serial:
         got = normalize(par[name].read(spark).toPandas(), PAYLOAD)

@@ -91,7 +91,6 @@ def test_multi_table_routed_equals_per_route_oracle(
 
     from pyspark.sql import functions as F
 
-    from polardbx_tools_spark.lake.multi import apply_multi_table
     from polardbx_tools_spark.lake.table import LakeTable
 
     base = tmp_path_factory.mktemp("mprop")
@@ -112,14 +111,15 @@ def test_multi_table_routed_equals_per_route_oracle(
                             key_cols=("conv_id", "turn_idx"))
         for n in ("a", "b")
     }
+    pipe = CdcPipeline(spark, tables)
     if split_batch and len(rows) > 2:
         mid = len(rows) // 2
-        apply_multi_table(spark, tables,
-                          mixed.filter(F.col("source_lsn") < mid), 0)
-        st_ = apply_multi_table(spark, tables,
-                                mixed.filter(F.col("source_lsn") >= mid), 1)
+        pipe.apply_batch(mixed.filter(F.col("source_lsn") < mid), 0,
+                         skip_offsets_filter=True)
+        st_ = pipe.apply_batch(mixed.filter(F.col("source_lsn") >= mid), 1,
+                               skip_offsets_filter=True)
     else:
-        st_ = apply_multi_table(spark, tables, mixed, 0)
+        st_ = pipe.apply_batch(mixed, 0, skip_offsets_filter=True)
 
     mixed_pd = mixed.toPandas()
     for name, t in tables.items():

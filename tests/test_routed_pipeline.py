@@ -6,6 +6,7 @@ partition); the ``max_errors`` gate fires; and a resumed run quarantines
 nothing twice."""
 
 import os
+import time
 
 import pandas.testing as pdt
 import pytest
@@ -124,3 +125,41 @@ def test_resume_across_null_source_partition_quarantines_once_defect_1c(spark, t
     _run(spark, tmp_path, cl, stop_after=2)
     _, tables = _run(spark, tmp_path, cl)
     assert sorted(lsn for t in tables.values() for lsn in _quarantined_lsns(spark, t)) == [420]
+
+
+def test_routed_read_transcripts_names_route_tables(spark, tmp_path):
+    pipe, _ = _pipeline(spark, tmp_path)
+    with pytest.raises(ValueError, match=r"LakeTable\.read: \['alpha', 'beta'\]"):
+        pipe.read_transcripts()
+
+
+def test_routed_wall_ms_is_the_batch_wall_clock(spark, tmp_path, monkeypatch):
+    """With ``max_parallel_tables=2`` the two route merges overlap, so the
+    routed batch's ``wall_ms`` (what ``run(monitor=True)`` divides by) is
+    its own wall clock, not the sum of the merges' times."""
+    from polardbx_tools_spark import pipeline as pipeline_mod
+
+    real = pipeline_mod.merge_into
+
+    def slow_merge(*args, **kwargs):
+        t0 = time.time()
+        time.sleep(1.0)
+        st = real(*args, **kwargs)
+        # the sleep is part of this route merge: count it in its wall_ms
+        st.wall_ms = int((time.time() - t0) * 1000)
+        return st
+
+    tables = {n: LakeTable(str(tmp_path / n)) for n in ROUTES}
+    pipe = CdcPipeline(spark, tables, bucket_count=4, max_parallel_tables=2)
+    pipe.ensure_table()
+    cl = _mixed(spark, {}).cache()
+    # warm-up batch at full speed, so the timed batch's routing pass is
+    # not the session's first scan of the changelog
+    pipe.apply_batch(cl.filter("source_lsn < 600"), batch_id=0)
+    monkeypatch.setattr(pipeline_mod, "merge_into", slow_merge)
+    t0 = time.time()
+    st = pipe.apply_batch(cl.filter("source_lsn >= 600"), batch_id=1)
+    elapsed_ms = (time.time() - t0) * 1000
+    cl.unpersist()
+    assert all(s.batch_events for s in st.per_table.values()) and len(st.per_table) == 2
+    assert st.wall_ms <= elapsed_ms, (st.wall_ms, elapsed_ms)
